@@ -35,11 +35,11 @@ Production path (ONE full-data shuffle — see SCALE.md):
                               shuffle granularity, and pixel-count
                               metrics.
 
-The two-stage topology (``assemble_parts``/``assemble_parts_salted`` →
-``shade_parts``) remains for pathological per-tile skew, where salted
-partial mosaics need their own exchange; ``assemble_tiles``/
-``exchange_halo``/``shade_tiles`` are the unfused building blocks used
-by the pyramid/water/streaming paths and tests.
+The two-stage topology (``assemble_parts_salted`` → ``shade_parts``)
+remains for pathological per-tile skew, where salted partial mosaics
+need their own exchange; ``assemble_tiles`` and ``exchange_halo`` are
+the unfused building blocks used by the isolines job, the contract
+queries and tests.
 
 Scale notes: the single wide operation carries source-compressed
 blocks plus ~0.1%-sized strips; assembled tiles never re-shuffle.
@@ -54,6 +54,7 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -262,7 +263,7 @@ def exchange_halo(tiles: DataFrame, tile_size: int) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# fused two-shuffle pipeline (the production path)
+# two-shuffle salted pipeline (pathological per-tile skew)
 # ---------------------------------------------------------------------------
 
 HALO_PART_LINEAGE_SCHEMA = HALO_PART_SCHEMA + ", n_blocks int"
@@ -282,34 +283,6 @@ def _emit_center_and_strips(
         out["data"].append(np.ascontiguousarray(cut(tile, halo)).tobytes())
         out["n_blocks"].append(0)
     return pd.DataFrame(out)
-
-
-def assemble_parts(assigned: DataFrame, tile_size: int) -> DataFrame:
-    """Fused stage A: blocks → stitched tile, emitted as its center row
-    plus the 8 edge strips keyed by the neighbors that need them.
-
-    One shuffle (blocks → tile) and one Python pass replace the separate
-    assemble + strip-emission stages: tile-sized blobs cross the Arrow
-    boundary once instead of twice.  The center row carries ``n_blocks``
-    (input-row lineage surfaced into the shaded output).
-    """
-
-    def stitch_and_split(pdf: pd.DataFrame) -> pd.DataFrame:
-        tile_x = int(pdf["tile_x"].iloc[0])
-        tile_y = int(pdf["tile_y"].iloc[0])
-        tile = np.full((tile_size, tile_size), DEM_HEIGHT_NONE, dtype=np.int16)
-        pdf = pdf.sort_values(["by", "bx", "image_id"])
-        for fmt, payload, w, h, bx, by in zip(
-            pdf["fmt"], pdf["bytes"], pdf["w"], pdf["h"], pdf["bx"], pdf["by"]
-        ):
-            block = _decode_block(fmt, payload, int(w))
-            y0, x0 = int(by) * int(h), int(bx) * int(w)
-            tile[y0 : y0 + int(h), x0 : x0 + int(w)] = block
-        return _emit_center_and_strips(tile, tile_x, tile_y, len(pdf))
-
-    return assigned.groupBy("tile_x", "tile_y").applyInPandas(
-        stitch_and_split, schema=HALO_PART_LINEAGE_SCHEMA
-    )
 
 
 def assemble_parts_salted(
@@ -333,9 +306,10 @@ def assemble_parts_salted(
                order-free row copying, and the partial payload per task
                is ~1/buckets of the tile.
 
-    Identical output to :func:`assemble_parts` (tested), at the cost of
-    one extra narrow shuffle of tile-sized partials — worth it only for
-    genuinely skewed inputs; AQE skew-split handles mild skew upstream.
+    Identical output to the fused :func:`hillshade_parts` →
+    :func:`shade_unified` path (tested), at the cost of one extra narrow
+    shuffle of tile-sized partials — worth it only for genuinely skewed
+    inputs; AQE skew-split handles mild skew upstream.
     """
     bpts = None  # inferred per group from block size
 
@@ -497,14 +471,14 @@ def _pad_from_parts(
 # single-shuffle fused pipeline (the production path)
 # ---------------------------------------------------------------------------
 #
-# assemble_parts → shade_parts moves every assembled tile (uncompressed
-# int16, ~26 MB at 3600²) through a second exchange + two extra Arrow
-# crossings.  The fused topology below cuts the halo strips from the
-# EDGE BLOCKS before any shuffle (narrow map over ~the border fraction
-# of input rows), unions them with the raw block stream, and lets ONE
-# groupBy(destination tile) bring together everything a tile needs:
-# its own blocks (still source-compressed) plus its neighbors' 1-px
-# edge contributions.  Assembly, halo padding, shading and PNG encode
+# A stitch stage feeding a shade stage moves every assembled tile
+# (uncompressed int16, ~26 MB at 3600²) through a second exchange + two
+# extra Arrow crossings.  The fused topology below cuts the halo strips
+# from the EDGE BLOCKS before any shuffle (narrow map over ~the border
+# fraction of input rows), unions them with the raw block stream, and
+# lets ONE groupBy(destination tile) bring together everything a tile
+# needs: its own blocks (still source-compressed) plus its neighbors'
+# 1-px edge contributions.  Assembly, halo padding, shading and PNG encode
 # then run in a single task — one full-data shuffle end-to-end, and
 # the bytes that cross it stay compressed.
 
@@ -872,47 +846,6 @@ def shade_padded_block(
     return out[::-1, :, :], shaded  # Y-flip to bitmap orientation
 
 
-def shade_tiles(
-    padded_tiles: DataFrame, tile_size: int,
-    script: str = pipeline.DEFAULT_SCRIPT,
-    png_level: int | None = None,
-) -> DataFrame:
-    """Run the shading pipeline over halo-padded tiles (one task per tile)."""
-    steps = pipeline.parse_script(script)
-    registry = dict(pipeline.SHADER_REGISTRY)  # snapshot: custom shaders
-    # registered on the driver ride the closure to executor processes
-    lvl = codec.RGBA_PNG_LEVEL if png_level is None else png_level
-
-    def shade(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {k: [] for k in (
-                "tile_x", "tile_y", "tile_name", "width", "height",
-                "png", "shaded_px", "total_px", "n_blocks",
-            )}
-            for tx, ty, buf in zip(pdf["tile_x"], pdf["tile_y"], pdf["padded"]):
-                padded = np.frombuffer(buf, dtype="<i2").reshape(
-                    tile_size + 2, tile_size + 2
-                )
-                rgba, shaded = shade_padded_block(
-                    padded, int(tx), int(ty), tile_size, steps,
-                    registry=registry,
-                )
-                from .tiles import tile_name as _tname
-
-                rows["tile_x"].append(int(tx))
-                rows["tile_y"].append(int(ty))
-                rows["tile_name"].append(_tname(0, int(tx), int(ty)))
-                rows["width"].append(tile_size)
-                rows["height"].append(tile_size)
-                rows["png"].append(codec.encode_rgba_png(rgba, lvl))
-                rows["shaded_px"].append(shaded)
-                rows["total_px"].append(tile_size * tile_size)
-                rows["n_blocks"].append(0)  # unfused path: no lineage carry
-            yield pd.DataFrame(rows)
-
-    return padded_tiles.mapInPandas(shade, schema=SHADED_SCHEMA)
-
-
 # ---------------------------------------------------------------------------
 # tile-shade: XTH water-bit tiles → fixed pipeline (reference §3.2)
 # ---------------------------------------------------------------------------
@@ -1125,11 +1058,20 @@ def run_hillshade(
     return shaded
 
 
+#: read errors that mean "nothing committed yet": no sink directory, or
+#: one holding no parquet (only ``_temporary/`` after a crash before the
+#: first commit).  Anything else propagates: treating an unreadable sink
+#: as empty would re-shade and append every tile.
+_EMPTY_SINK_CONDITIONS = ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
+
+
 def _read_manifest(spark: SparkSession, output_dir: str) -> DataFrame | None:
     try:
         return spark.read.parquet(output_dir).select("tile_x", "tile_y").distinct()
-    except Exception:
-        return None
+    except AnalysisException as e:
+        if e.getCondition() in _EMPTY_SINK_CONDITIONS:
+            return None
+        raise
 
 
 # ---------------------------------------------------------------------------

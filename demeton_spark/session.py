@@ -5,6 +5,17 @@ splitting), Arrow transfer for pandas UDFs, shuffle partitions sized to
 the core count (tiles are coarse units — a few per core is enough), and
 generous Arrow batch limits because one assembled tile row is a multi-MB
 binary blob.
+
+Per-task cost at the Python boundary: PySpark's worker runs
+``importlib.invalidate_caches()`` before every task, which on CPython
+3.11/3.12 re-parses the central directory of every zip on the worker's
+``sys.path`` (pyspark.zip, the spark-core jar, py4j) — 0.21–0.235 s of
+CPU per task, about half the Python-worker CPU of a small hillshade
+run.  The fix is not a setting here: ``demeton_spark/__init__.py``
+keeps unchanged directories, because every worker that unpickles a
+package UDF imports the package (also from ``--py-files``), whereas a
+``spark.python.worker.module`` loads in the worker daemon before any
+task has put ``--py-files`` on the path.
 """
 
 from __future__ import annotations

@@ -167,6 +167,30 @@ def test_resume_preserves_halo_correctness(spark, images, tmp_path):
     assert np.array_equal(rgba, oracle[y0 : y0 + ts, ts : 2 * ts])
 
 
+def test_manifest_of_missing_sink_is_empty(spark, tmp_path):
+    assert engine._read_manifest(spark, str(tmp_path / "absent")) is None
+
+
+def test_manifest_of_uncommitted_sink_is_empty(spark, tmp_path):
+    """A crash before the first commit leaves only ``_temporary/``."""
+    out = tmp_path / "crashed"
+    (out / "_temporary" / "0").mkdir(parents=True)
+    assert engine._read_manifest(spark, str(out)) is None
+
+
+def test_resume_over_unreadable_sink_fails_before_writing(spark, images, tmp_path):
+    """An unreadable manifest must not read as "nothing done yet": that
+    would re-shade and append every tile."""
+    out = tmp_path / "corrupt"
+    out.mkdir()
+    (out / "part-00000.parquet").write_bytes(b"not a parquet file")
+    with pytest.raises(Exception):
+        engine.run_hillshade(
+            spark, images, SPEC.tile_size, output_dir=str(out), resume=True
+        )
+    assert [p.name for p in out.iterdir()] == ["part-00000.parquet"]
+
+
 def test_salted_assembly_matches_unsalted(spark):
     """Two-phase salted assembly (skew path) must be byte-identical to
     the plain groupBy(tile) stitch, including lineage counts."""
