@@ -1,5 +1,5 @@
-"""The Spark dataflow: image rows → tile assignment → tile assembly →
-halo exchange → vectorized shading → PNG tile sink.
+"""The Spark dataflow: image rows → tile assignment → tile assembly with
+halo strips → vectorized shading → PNG tile sink.
 
 This is the idiomatic-Spark re-expression of Demeton's ``shade``
 lifecycle (/root/reference/Demeton/Commands/ShadeCommand.fs:555-614),
@@ -35,16 +35,16 @@ Production path (ONE full-data shuffle — see SCALE.md):
                               shuffle granularity, and pixel-count
                               metrics.
 
-The two-stage topology (``assemble_parts_salted`` → ``shade_parts``)
-remains for pathological per-tile skew, where salted partial mosaics
-need their own exchange; ``assemble_tiles`` and ``exchange_halo`` are
-the unfused building blocks used by the isolines job, the contract
-queries and tests.
+This is the only hillshade topology.  ``assemble_tiles`` is the unfused
+stitch used by the isolines job, the contract queries and tests.
 
 Scale notes: the single wide operation carries source-compressed
 blocks plus ~0.1%-sized strips; assembled tiles never re-shuffle.
-Skewed (land-heavy) tiles are handled by AQE skew splitting, the
-1-tile-per-task granularity, and the salted path for extremes.
+Skewed (land-heavy) tiles are bounded by winner-only decode (one decode
+per block position however many duplicates arrive) and the
+1-tile-per-task granularity.  One tile's group is never split across
+tasks: at a 200× single-tile hotspot the fused path still beat a
+salted two-stage assembly (SCALE.md).
 """
 
 from __future__ import annotations
@@ -162,313 +162,7 @@ def assemble_tiles(assigned: DataFrame, tile_size: int) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# 3. halo exchange (J3 — the explicit stencil join)
-# ---------------------------------------------------------------------------
-
-HALO_PART_SCHEMA = "tile_x int, tile_y int, part string, data binary"
-PADDED_SCHEMA = "tile_x int, tile_y int, padded binary"
-
-#: strip emitted from a tile → (dest offset, part name at destination,
-#: k-slab slice of the sender's TILE).  Part names say where the data
-#: lands in the receiver's padded array; k = halo width.
-_STRIP_SPEC = [
-    ((0, 1), "S", lambda t, k: t[-k:, :]),   # my north edge = N nbr's south pad
-    ((0, -1), "N", lambda t, k: t[:k, :]),   # my south edge = S nbr's north pad
-    ((1, 0), "W", lambda t, k: t[:, -k:]),   # my east edge = E nbr's west pad
-    ((-1, 0), "E", lambda t, k: t[:, :k]),   # my west edge = W nbr's east pad
-    ((1, 1), "SW", lambda t, k: t[-k:, -k:]),
-    ((-1, 1), "SE", lambda t, k: t[-k:, :k]),
-    ((1, -1), "NW", lambda t, k: t[:k, -k:]),
-    ((-1, -1), "NE", lambda t, k: t[:k, :k]),
-]
-
-
-def exchange_halo(tiles: DataFrame, tile_size: int) -> DataFrame:
-    """Pad every tile to (ts+2)² using its 8 neighbors' edge strips.
-
-    One narrow map emits the strips (~4·ts cells per tile, ≈0.1% of the
-    tile), one shuffle groups strips with their destination tile.
-    Missing neighbors (world edge) pad with DEM_HEIGHT_NONE, matching
-    ``extract``'s out-of-bounds fill (Dem/Funcs.fs:395-416).
-    """
-
-    def emit_parts(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # one traversal emits the center AND its 8 strips — a union of two
-        # branches over the same upstream would recompute tile assembly
-        # twice (Spark does not CSE across union arms)
-        for pdf in batches:
-            out: dict[str, list] = {"tile_x": [], "tile_y": [], "part": [], "data": []}
-            for tx, ty, buf in zip(pdf["tile_x"], pdf["tile_y"], pdf["heights"]):
-                out["tile_x"].append(int(tx))
-                out["tile_y"].append(int(ty))
-                out["part"].append("C")
-                out["data"].append(buf)
-                tile = np.frombuffer(buf, dtype="<i2").reshape(tile_size, tile_size)
-                for (dx, dy), part, cut in _STRIP_SPEC:
-                    out["tile_x"].append(int(tx) + dx)
-                    out["tile_y"].append(int(ty) + dy)
-                    out["part"].append(part)
-                    out["data"].append(
-                        np.ascontiguousarray(cut(tile, 1)).tobytes()
-                    )
-            yield pd.DataFrame(out)
-
-    parts_df = tiles.mapInPandas(emit_parts, schema=HALO_PART_SCHEMA)
-
-    def pad(pdf: pd.DataFrame) -> pd.DataFrame:
-        parts = dict(zip(pdf["part"], pdf["data"]))
-        if "C" not in parts:  # strips sent into empty space (no such tile)
-            return pd.DataFrame(columns=["tile_x", "tile_y", "padded"])
-        ts = tile_size
-        padded = np.full((ts + 2, ts + 2), DEM_HEIGHT_NONE, dtype=np.int16)
-        padded[1:-1, 1:-1] = np.frombuffer(parts["C"], dtype="<i2").reshape(ts, ts)
-
-        def strip(name: str, shape: tuple[int, int]) -> np.ndarray | None:
-            if name not in parts:
-                return None
-            return np.frombuffer(parts[name], dtype="<i2").reshape(shape)
-
-        s = strip("S", (1, ts))
-        if s is not None:
-            padded[0, 1:-1] = s[0]
-        n = strip("N", (1, ts))
-        if n is not None:
-            padded[-1, 1:-1] = n[0]
-        w = strip("W", (ts, 1))
-        if w is not None:
-            padded[1:-1, 0] = w[:, 0]
-        e = strip("E", (ts, 1))
-        if e is not None:
-            padded[1:-1, -1] = e[:, 0]
-        for corner, (yy, xx) in [
-            ("SW", (0, 0)),
-            ("SE", (0, ts + 1)),
-            ("NW", (ts + 1, 0)),
-            ("NE", (ts + 1, ts + 1)),
-        ]:
-            c = strip(corner, (1, 1))
-            if c is not None:
-                padded[yy, xx] = c[0, 0]
-        return pd.DataFrame(
-            {
-                "tile_x": [int(pdf["tile_x"].iloc[0])],
-                "tile_y": [int(pdf["tile_y"].iloc[0])],
-                "padded": [padded.tobytes()],
-            }
-        )
-
-    return parts_df.groupBy("tile_x", "tile_y").applyInPandas(
-        pad, schema=PADDED_SCHEMA
-    )
-
-
-# ---------------------------------------------------------------------------
-# two-shuffle salted pipeline (pathological per-tile skew)
-# ---------------------------------------------------------------------------
-
-HALO_PART_LINEAGE_SCHEMA = HALO_PART_SCHEMA + ", n_blocks int"
-
-
-def _emit_center_and_strips(
-    tile: np.ndarray, tile_x: int, tile_y: int, n_blocks: int,
-    halo: int = 1,
-) -> pd.DataFrame:
-    out: dict[str, list] = {"tile_x": [tile_x], "tile_y": [tile_y],
-                            "part": ["C"], "data": [tile.tobytes()],
-                            "n_blocks": [n_blocks]}
-    for (dx, dy), part, cut in _STRIP_SPEC:
-        out["tile_x"].append(tile_x + dx)
-        out["tile_y"].append(tile_y + dy)
-        out["part"].append(part)
-        out["data"].append(np.ascontiguousarray(cut(tile, halo)).tobytes())
-        out["n_blocks"].append(0)
-    return pd.DataFrame(out)
-
-
-def assemble_parts_salted(
-    assigned: DataFrame, tile_size: int, salt_buckets: int,
-    halo: int = 1,
-) -> DataFrame:
-    """Salted two-phase assembly for skewed tiles (SURVEY.md §7.4 risk 3;
-    the north-rule "salted repartitioning handles land/ocean tile skew").
-
-    Heavy tiles (duplicate-dense "land" tiles — the synthetic skew knob
-    makes some tiles 8× denser) turn the single groupBy(tile) task into a
-    straggler.  Salting by BLOCK POSITION splits one hot tile across
-    ``salt_buckets`` tasks:
-
-      stage 1: groupBy(tile, salt) with salt = (by·bpts + bx) % buckets —
-               all duplicates of one block position share a salt, so the
-               deterministic (by, bx, image_id) overwrite order is
-               preserved within the only group that writes that position;
-      stage 2: groupBy(tile) merges the partial mosaics — positions are
-               disjoint across salts by construction, so the merge is
-               order-free row copying, and the partial payload per task
-               is ~1/buckets of the tile.
-
-    Identical output to the fused :func:`hillshade_parts` →
-    :func:`shade_unified` path (tested), at the cost of one extra narrow
-    shuffle of tile-sized partials — worth it only for genuinely skewed
-    inputs; AQE skew-split handles mild skew upstream.
-    """
-    bpts = None  # inferred per group from block size
-
-    salted = assigned.withColumn(
-        "salt",
-        F.pmod(
-            F.col("by") * F.lit(10_000) + F.col("bx"), F.lit(salt_buckets)
-        ).cast("int"),
-    )
-
-    partial_schema = (
-        "tile_x int, tile_y int, salt int, partial binary, n_blocks int"
-    )
-
-    def partial_stitch(pdf: pd.DataFrame) -> pd.DataFrame:
-        tile = np.full((tile_size, tile_size), DEM_HEIGHT_NONE, dtype=np.int16)
-        pdf = pdf.sort_values(["by", "bx", "image_id"])
-        for fmt, payload, w, h, bx, by in zip(
-            pdf["fmt"], pdf["bytes"], pdf["w"], pdf["h"], pdf["bx"], pdf["by"]
-        ):
-            block = _decode_block(fmt, payload, int(w))
-            y0, x0 = int(by) * int(h), int(bx) * int(w)
-            tile[y0 : y0 + int(h), x0 : x0 + int(w)] = block
-        return pd.DataFrame(
-            {
-                "tile_x": [int(pdf["tile_x"].iloc[0])],
-                "tile_y": [int(pdf["tile_y"].iloc[0])],
-                "salt": [int(pdf["salt"].iloc[0])],
-                "partial": [tile.tobytes()],
-                "n_blocks": [len(pdf)],
-            }
-        )
-
-    partials = salted.groupBy("tile_x", "tile_y", "salt").applyInPandas(
-        partial_stitch, schema=partial_schema
-    )
-
-    def merge_partials(pdf: pd.DataFrame) -> pd.DataFrame:
-        tile = np.full((tile_size, tile_size), DEM_HEIGHT_NONE, dtype=np.int16)
-        n_blocks = 0
-        for buf, nb in zip(pdf["partial"], pdf["n_blocks"]):
-            part = np.frombuffer(buf, dtype="<i2").reshape(tile_size, tile_size)
-            # positions are disjoint across salts: copy where the partial
-            # wrote anything — a position covered with an all-NONE block
-            # is indistinguishable from uncovered, which is safe because
-            # the base canvas is also NONE (identical result either way)
-            written = part != DEM_HEIGHT_NONE
-            tile[written] = part[written]
-            n_blocks += int(nb)
-        return _emit_center_and_strips(
-            tile, int(pdf["tile_x"].iloc[0]), int(pdf["tile_y"].iloc[0]),
-            n_blocks, halo,
-        )
-
-    return partials.groupBy("tile_x", "tile_y").applyInPandas(
-        merge_partials, schema=HALO_PART_LINEAGE_SCHEMA
-    )
-
-
-def shade_parts(
-    parts: DataFrame, tile_size: int, script: str,
-    clip_poly: np.ndarray | None = None,
-    halo: int = 1,
-    prefilter: str | None = None,
-    png_level: int | None = None,
-) -> DataFrame:
-    """Fused stage B: halo-pad + optional prefilters + Horn + shaders +
-    PNG encode in one applyInPandas (one shuffle keyed by destination
-    tile).  ``halo`` must be 1 + number of prefilter steps."""
-    steps = pipeline.parse_script(script)
-    registry = dict(pipeline.SHADER_REGISTRY)  # snapshot: custom shaders
-    # registered on the driver ride the closure to executor processes
-    lvl = codec.RGBA_PNG_LEVEL if png_level is None else png_level
-    pre_steps = pipeline.parse_script(prefilter) if prefilter else []
-    if halo != 1 + len(pre_steps):
-        raise ValueError(
-            f"halo {halo} must be 1 + number of prefilter steps "
-            f"({len(pre_steps)})"
-        )
-
-    def pad_and_shade(pdf: pd.DataFrame) -> pd.DataFrame:
-        parts_map = dict(zip(pdf["part"], pdf["data"]))
-        if "C" not in parts_map:
-            return pd.DataFrame(
-                columns=["tile_x", "tile_y", "tile_name", "width", "height",
-                         "png", "shaded_px", "total_px", "n_blocks"]
-            )
-        ts = tile_size
-        tile_x = int(pdf["tile_x"].iloc[0])
-        tile_y = int(pdf["tile_y"].iloc[0])
-        # lineage: input-row count travels on the center part row
-        n_blocks = (
-            int(pdf.loc[pdf["part"] == "C", "n_blocks"].iloc[0])
-            if "n_blocks" in pdf.columns
-            else 0
-        )
-        padded = _pad_from_parts(parts_map, ts, halo=halo)
-        if pre_steps:
-            padded = apply_prefilters(padded, pre_steps)
-        rgba, shaded = shade_padded_block(
-            padded, tile_x, tile_y, ts, steps, clip_poly=clip_poly,
-            registry=registry,
-        )
-        return pd.DataFrame(
-            {
-                "tile_x": [tile_x],
-                "tile_y": [tile_y],
-                "tile_name": [_tile_name(0, tile_x, tile_y)],
-                "width": [ts],
-                "height": [ts],
-                "png": [codec.encode_rgba_png(rgba, lvl)],
-                "shaded_px": [shaded],
-                "total_px": [ts * ts],
-                "n_blocks": [n_blocks],
-            }
-        )
-
-    return parts.groupBy("tile_x", "tile_y").applyInPandas(
-        pad_and_shade, schema=SHADED_SCHEMA
-    )
-
-
-def _pad_from_parts(
-    parts_map: dict, ts: int, fill: int = DEM_HEIGHT_NONE, halo: int = 1
-) -> np.ndarray:
-    """Assemble the (ts+2k)² halo-padded block from center + k-slab
-    strip parts.
-
-    ``fill`` is the missing-neighbor value: DEM_HEIGHT_NONE for plain
-    height tiles, 0 for XTH-packed tiles (offset 0 decodes to missing
-    and carries no water bit)."""
-    k = halo
-    padded = np.full((ts + 2 * k, ts + 2 * k), fill, dtype=np.int16)
-    padded[k:-k, k:-k] = np.frombuffer(
-        parts_map["C"], dtype="<i2"
-    ).reshape(ts, ts)
-    mid = slice(k, ts + k)
-    hi = slice(ts + k, ts + 2 * k)
-    lo = slice(0, k)
-    edges = [
-        ("S", (k, ts), (lo, mid)),
-        ("N", (k, ts), (hi, mid)),
-        ("W", (ts, k), (mid, lo)),
-        ("E", (ts, k), (mid, hi)),
-        ("SW", (k, k), (lo, lo)),
-        ("SE", (k, k), (lo, hi)),
-        ("NW", (k, k), (hi, lo)),
-        ("NE", (k, k), (hi, hi)),
-    ]
-    for name, shape, (ys, xs) in edges:
-        if name in parts_map:
-            padded[ys, xs] = np.frombuffer(
-                parts_map[name], dtype="<i2"
-            ).reshape(shape)
-    return padded
-
-
-# ---------------------------------------------------------------------------
-# single-shuffle fused pipeline (the production path)
+# 3. halo strips + fused shade (J3 — the explicit stencil join)
 # ---------------------------------------------------------------------------
 #
 # A stitch stage feeding a shade stage moves every assembled tile
@@ -488,10 +182,12 @@ UNIFIED_PART_SCHEMA = (
 )
 
 #: (edge predicate, dest offset, part name, cut of the decoded block
-#: given halo width k) — block-level version of _STRIP_SPEC: a block on
-#: its tile's border contributes the k-px slab the neighbor needs for
-#: halo padding (k=1 for plain Horn; k=2 when a prefilter consumes a
-#: ring first — Roadmap.md low/high-pass filters).
+#: given halo width k): a block on its tile's border contributes the
+#: k-px slab the neighbor needs for halo padding (k=1 for plain Horn;
+#: k=2 when a prefilter consumes a ring first — Roadmap.md low/high-pass
+#: filters).  Part names say where the slab lands in the receiver's
+#: padded array.  A whole tile is one block on every edge, which is how
+#: :func:`run_tile_shade` cuts its tile-level strips.
 _BLOCK_STRIP_SPEC = [
     (lambda bx, by, nx, ny: by == ny - 1, (0, 1), "S",
      lambda b, k: b[-k:, :]),
@@ -566,34 +262,6 @@ def emit_block_strips(
     return edge.mapInPandas(cut, schema=UNIFIED_PART_SCHEMA)
 
 
-def dedup_duplicate_blocks(assigned: DataFrame) -> DataFrame:
-    """Pre-shuffle duplicate collapse: within each Arrow batch keep only
-    the max-``image_id`` row per (tile_x, tile_y, bx, by).
-
-    Purely local — no shuffle, no global aggregation — so the
-    overwrite-order winner (max image_id, the same rule the
-    post-shuffle winner-only decode applies) always survives, and the
-    pipeline output stays byte-identical.  Enable via
-    ``run_hillshade(local_dedup=True)`` when the source carries heavy
-    duplicate-block skew: losing payloads then never cross the wire
-    (the SCALE.md caveat), at the cost of one Arrow pass over the
-    input — a win whenever the duplication ratio beats ~1.5×.
-    """
-    schema = assigned.schema
-
-    def dedup(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                yield pdf
-                continue
-            idx = pdf.groupby(["tile_x", "tile_y", "bx", "by"])[
-                "image_id"
-            ].idxmax()
-            yield pdf.loc[np.sort(idx.to_numpy())]
-
-    return assigned.mapInPandas(dedup, schema=schema)
-
-
 def hillshade_parts(
     assigned: DataFrame, tile_size: int, halo: int = 1
 ) -> DataFrame:
@@ -642,21 +310,78 @@ def apply_prefilters(padded: np.ndarray, steps) -> np.ndarray:
     return kernels.float_to_heights(f)
 
 
+def _shade_tile_parts(
+    parts: pd.DataFrame, tile_x: int, tile_y: int, tile_size: int,
+    steps, pre_steps, clip_poly: np.ndarray | None,
+    registry: dict, png_level: int,
+) -> tuple[bytes, int, int] | None:
+    """One destination tile's parts (the non-key columns of
+    :data:`UNIFIED_PART_SCHEMA`) → ``(png, shaded_px, n_blocks)``: stitch
+    the blocks, place the neighbor strips into the k-px halo (k = 1 +
+    prefilter steps), optional height prefilters, Horn + shaders, PNG
+    encode.  None when no block of the tile arrived (strips sent past
+    the world edge).  Shared by the batch :func:`shade_unified` and the
+    streaming twin."""
+    is_block = parts["part"] == "B"
+    blocks = parts[is_block]
+    if blocks.empty:
+        return None
+    ts, k = tile_size, 1 + len(pre_steps)
+    padded = np.full((ts + 2 * k, ts + 2 * k), DEM_HEIGHT_NONE, dtype=np.int16)
+    n_blocks = int(is_block.sum())  # lineage: rows consumed
+    # overwrite-order dedup: in (by, bx, image_id) order only the
+    # LAST block per position is ever visible, so decode just the
+    # winners — duplicate-heavy ("land") tiles cost one decode per
+    # position no matter how many copies arrived (the skew defense
+    # that makes salting unnecessary, measured at a 200× hotspot in
+    # SCALE.md; output byte-identical, tested)
+    blocks = blocks.sort_values(["by", "bx", "image_id"]).drop_duplicates(
+        ["bx", "by"], keep="last"
+    )
+    for fmt, payload, w, h, bx, by in zip(
+        blocks["fmt"], blocks["data"], blocks["w"], blocks["h"],
+        blocks["bx"], blocks["by"],
+    ):
+        block = _decode_block(fmt, payload, int(w))
+        y0, x0 = k + int(by) * int(h), k + int(bx) * int(w)
+        padded[y0 : y0 + int(h), x0 : x0 + int(w)] = block
+    strips = parts[~is_block]
+    if not strips.empty:
+        # same overwrite-order winner selection per strip position:
+        # duplicate edge blocks resolve identically on both sides
+        # of the tile boundary
+        strips = strips.sort_values(
+            ["by", "bx", "image_id"]
+        ).drop_duplicates(["part", "bx", "by"], keep="last")
+        for part, payload, w, h, bx, by in zip(
+            strips["part"], strips["data"], strips["w"], strips["h"],
+            strips["bx"], strips["by"],
+        ):
+            cells = np.frombuffer(payload, dtype="<i2")
+            _place_strip(padded, part, cells, int(bx), int(by),
+                         int(w), int(h), ts, k)
+    if pre_steps:
+        padded = apply_prefilters(padded, pre_steps)
+    rgba, shaded = shade_padded_block(
+        padded, tile_x, tile_y, ts, steps, clip_poly=clip_poly,
+        registry=registry,
+    )
+    return codec.encode_rgba_png(rgba, png_level), shaded, n_blocks
+
+
 def shade_unified(
     parts: DataFrame, tile_size: int, script: str,
-    fill: int = DEM_HEIGHT_NONE,
     clip_poly: np.ndarray | None = None,
     halo: int = 1,
     prefilter: str | None = None,
     png_level: int | None = None,
 ) -> DataFrame:
-    """One grouped task per tile: stitch blocks, apply neighbor strips
-    into the k-px halo, optional height prefilters, Horn + shaders, PNG
-    encode.  ``parts`` comes from :func:`hillshade_parts` (same halo);
-    groups with no center blocks (strips sent past the world edge)
-    produce nothing.  ``prefilter`` is a step script over
-    kernels.PREFILTERS (e.g. ``"blur"`` or ``"sharpen(amount=1.5)"``);
-    each step consumes one halo ring, so halo must be 1 + n_steps."""
+    """One grouped task per tile running :func:`_shade_tile_parts`.
+    ``parts`` comes from :func:`hillshade_parts` (same halo); groups
+    with no center blocks (strips sent past the world edge) produce
+    nothing.  ``prefilter`` is a step script over kernels.PREFILTERS
+    (e.g. ``"blur"`` or ``"sharpen(amount=1.5)"``); each step consumes
+    one halo ring, so halo must be 1 + n_steps."""
     steps = pipeline.parse_script(script)
     registry = dict(pipeline.SHADER_REGISTRY)  # snapshot: custom shaders
     # registered on the driver ride the closure to executor processes
@@ -669,87 +394,16 @@ def shade_unified(
         )
 
     def assemble_pad_shade(pdf: pd.DataFrame) -> pd.DataFrame:
-        import os as _eos
-        import time as _etime
-
-        # in-UDF phase profiling (set DEMETON_PROF_DIR to a directory):
-        # splits worker time into assemble/shade/encode so harness
-        # overhead (Arrow, scheduling) is measurable as task_time minus
-        # the sum of these — the attribution tool behind SCALE.md's
-        # core-scaling analysis.  Off (falsy) on every normal run.
-        prof = _eos.environ.get("DEMETON_PROF_DIR")
-        t0 = _etime.perf_counter() if prof else 0.0
-        is_block = pdf["part"] == "B"
-        blocks = pdf[is_block]
-        if blocks.empty:
-            return pd.DataFrame(
-                columns=["tile_x", "tile_y", "tile_name", "width", "height",
-                         "png", "shaded_px", "total_px", "n_blocks"]
-            )
-        ts, k = tile_size, halo
         tile_x = int(pdf["tile_x"].iloc[0])
         tile_y = int(pdf["tile_y"].iloc[0])
-        padded = np.full((ts + 2 * k, ts + 2 * k), fill, dtype=np.int16)
-        n_blocks_in = int(is_block.sum())  # lineage: rows consumed
-        # overwrite-order dedup: in (by, bx, image_id) order only the
-        # LAST block per position is ever visible, so decode just the
-        # winners — duplicate-heavy ("land") tiles cost one decode per
-        # position no matter how many copies arrived (the skew defense
-        # that makes salting unnecessary short of cluster-scale
-        # hotspots; output byte-identical, tested)
-        blocks = blocks.sort_values(["by", "bx", "image_id"]).drop_duplicates(
-            ["bx", "by"], keep="last"
+        out = _shade_tile_parts(
+            pdf, tile_x, tile_y, tile_size, steps, pre_steps, clip_poly,
+            registry, lvl,
         )
-        for fmt, payload, w, h, bx, by in zip(
-            blocks["fmt"], blocks["data"], blocks["w"], blocks["h"],
-            blocks["bx"], blocks["by"],
-        ):
-            block = _decode_block(fmt, payload, int(w))
-            y0, x0 = k + int(by) * int(h), k + int(bx) * int(w)
-            padded[y0 : y0 + int(h), x0 : x0 + int(w)] = block
-        strips = pdf[~is_block]
-        if not strips.empty:
-            # same overwrite-order winner selection per strip position:
-            # duplicate edge blocks resolve identically on both sides
-            # of the tile boundary
-            strips = strips.sort_values(
-                ["by", "bx", "image_id"]
-            ).drop_duplicates(["part", "bx", "by"], keep="last")
-            for part, payload, w, h, bx, by in zip(
-                strips["part"], strips["data"], strips["w"], strips["h"],
-                strips["bx"], strips["by"],
-            ):
-                cells = np.frombuffer(payload, dtype="<i2")
-                _place_strip(padded, part, cells, int(bx), int(by),
-                             int(w), int(h), ts, k)
-        if pre_steps:
-            padded = apply_prefilters(padded, pre_steps)
-        t1 = _etime.perf_counter() if prof else 0.0
-        rgba, shaded = shade_padded_block(
-            padded, tile_x, tile_y, ts, steps, clip_poly=clip_poly,
-            registry=registry,
-        )
-        t2 = _etime.perf_counter() if prof else 0.0
-        png = codec.encode_rgba_png(rgba, lvl)
-        if prof:
-            t3 = _etime.perf_counter()
-            with open(
-                f"{prof}/udf_{_eos.getpid()}.txt", "a"
-            ) as fh:  # per-worker file: no cross-process lock needed
-                fh.write(f"{t1 - t0:.4f} {t2 - t1:.4f} {t3 - t2:.4f}\n")
-        return pd.DataFrame(
-            {
-                "tile_x": [tile_x],
-                "tile_y": [tile_y],
-                "tile_name": [_tile_name(0, tile_x, tile_y)],
-                "width": [ts],
-                "height": [ts],
-                "png": [png],
-                "shaded_px": [shaded],
-                "total_px": [ts * ts],
-                "n_blocks": [n_blocks_in],
-            }
-        )
+        if out is None:
+            return pd.DataFrame(columns=_SHADED_COLUMNS)
+        png, shaded, n_blocks = out
+        return _shaded_row(tile_x, tile_y, tile_size, png, shaded, n_blocks)
 
     return parts.groupBy("tile_x", "tile_y").applyInPandas(
         assemble_pad_shade, schema=SHADED_SCHEMA
@@ -764,17 +418,32 @@ SHADED_SCHEMA = (
     "tile_x int, tile_y int, tile_name string, width int, height int, "
     "png binary, shaded_px long, total_px long, n_blocks int"
 )
+_SHADED_COLUMNS = [c.split()[0] for c in SHADED_SCHEMA.split(", ")]
+
+
+def _shaded_row(tile_x: int, tile_y: int, ts: int, png: bytes,
+                shaded: int, n_blocks: int) -> pd.DataFrame:
+    return pd.DataFrame(
+        {
+            "tile_x": [tile_x],
+            "tile_y": [tile_y],
+            "tile_name": [_tile_name(0, tile_x, tile_y)],
+            "width": [ts],
+            "height": [ts],
+            "png": [png],
+            "shaded_px": [shaded],
+            "total_px": [ts * ts],
+            "n_blocks": [n_blocks],
+        }
+    )
 
 
 #: row-band height for chunked shading: bounds the per-task float32
 #: working set (~band·width·4B per temporary ≈ 0.9MB at 1800 wide) so the
 #: kernel stays cache-resident and 32 concurrent Python workers don't
 #: fight for memory bandwidth (measured: band=128 doubles 32-way
-#: throughput vs band=256, 10× vs whole-tile).  Env-overridable for
-#: cluster tuning (workers read the executor environment at import).
-import os as _os
-
-SHADE_BAND_ROWS = int(_os.environ.get("DEMETON_SHADE_BAND_ROWS", "128"))
+#: throughput vs band=256, 10× vs whole-tile).
+SHADE_BAND_ROWS = 128
 
 
 def shade_padded_block(
@@ -858,6 +527,10 @@ TILE_SHADE_SCRIPT = (
     "|+igor(compose=darken)|+water|+wateroutline"
 )
 
+#: tile-level halo parts: the center ("C") or one of its 8 edge strips,
+#: keyed by the destination tile
+HALO_PART_SCHEMA = "tile_x int, tile_y int, part string, data binary"
+
 
 def run_tile_shade(
     spark: SparkSession,
@@ -881,31 +554,43 @@ def run_tile_shade(
     lvl = codec.RGBA_PNG_LEVEL if png_level is None else png_level
 
     def emit(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        # one traversal emits each tile's center AND its 8 one-px strips
+        # (a whole tile is one block on every edge of _BLOCK_STRIP_SPEC)
         ts = tile_size
         for pdf in batches:
-            frames = []
+            out: dict[str, list] = {"tile_x": [], "tile_y": [], "part": [],
+                                    "data": []}
             for tx, ty, buf in zip(pdf["tile_x"], pdf["tile_y"], pdf["xth"]):
                 packed = np.frombuffer(buf, dtype="<i2").reshape(ts, ts)
-                frames.append(
-                    _emit_center_and_strips(packed, int(tx), int(ty), 1)
-                )
-            yield pd.concat(frames) if frames else pd.DataFrame(
-                {k: [] for k in ("tile_x", "tile_y", "part", "data", "n_blocks")}
-            )
+                cuts = [((0, 0), "C", packed)] + [
+                    ((dx, dy), part, cut(packed, 1))
+                    for _on_edge, (dx, dy), part, cut in _BLOCK_STRIP_SPEC
+                ]
+                for (dx, dy), part, cells in cuts:
+                    out["tile_x"].append(int(tx) + dx)
+                    out["tile_y"].append(int(ty) + dy)
+                    out["part"].append(part)
+                    out["data"].append(np.ascontiguousarray(cells).tobytes())
+            yield pd.DataFrame(out)
 
-    parts = xth_tiles.mapInPandas(emit, schema=HALO_PART_LINEAGE_SCHEMA)
+    parts = xth_tiles.mapInPandas(emit, schema=HALO_PART_SCHEMA)
 
     def pad_and_shade(pdf: pd.DataFrame) -> pd.DataFrame:
         parts_map = dict(zip(pdf["part"], pdf["data"]))
-        if "C" not in parts_map:
-            return pd.DataFrame(
-                columns=["tile_x", "tile_y", "tile_name", "width", "height",
-                         "png", "shaded_px", "total_px", "n_blocks"]
-            )
+        if "C" not in parts_map:  # strips sent into empty space
+            return pd.DataFrame(columns=_SHADED_COLUMNS)
         ts = tile_size
         tile_x = int(pdf["tile_x"].iloc[0])
         tile_y = int(pdf["tile_y"].iloc[0])
-        padded_packed = _pad_from_parts(parts_map, ts, fill=0)
+        # missing-neighbor fill 0: offset 0 decodes to missing and
+        # carries no water bit
+        padded_packed = np.zeros((ts + 2, ts + 2), dtype=np.int16)
+        for part, data in parts_map.items():
+            cells = np.frombuffer(data, dtype="<i2")
+            if part == "C":
+                padded_packed[1:-1, 1:-1] = cells.reshape(ts, ts)
+            else:
+                _place_strip(padded_packed, part, cells, 0, 0, ts, ts, ts)
         packed_u = padded_packed.view(np.uint16)
         water_pad = (packed_u >> 15).astype(bool)
         offs = (packed_u & 0x7FFF).astype(np.int32)
@@ -916,19 +601,8 @@ def run_tile_shade(
             heights, tile_x, tile_y, ts, steps, water=water_pad[1:-1, 1:-1],
             registry=registry,
         )
-        return pd.DataFrame(
-            {
-                "tile_x": [tile_x],
-                "tile_y": [tile_y],
-                "tile_name": [_tile_name(0, tile_x, tile_y)],
-                "width": [ts],
-                "height": [ts],
-                "png": [codec.encode_rgba_png(rgba, lvl)],
-                "shaded_px": [shaded],
-                "total_px": [ts * ts],
-                "n_blocks": [1],
-            }
-        )
+        return _shaded_row(tile_x, tile_y, ts,
+                           codec.encode_rgba_png(rgba, lvl), shaded, 1)
 
     return parts.groupBy("tile_x", "tile_y").applyInPandas(
         pad_and_shade, schema=SHADED_SCHEMA
@@ -939,6 +613,27 @@ def run_tile_shade(
 # 5. end-to-end job with resumable checkpoints + metrics
 # ---------------------------------------------------------------------------
 
+def clip_cover(clip_polygon) -> tuple[np.ndarray, tuple[int, int, int, int]]:
+    """Validate a sequence of (lon, lat) clip vertices; return them as an
+    array plus the inclusive tile cover ``(tx0, ty0, tx1, ty1)`` of the
+    polygon's bbox (floor/ceil−1 rule, Dem/Funcs.fs:284-298)."""
+    clip_poly = np.asarray(clip_polygon, dtype=np.float64)
+    # validate before any work is scheduled: a self-intersecting clip
+    # polygon would silently mis-clip under the crossing-number rule
+    # (PolygonSelfIntersection.fs sweep semantics)
+    from .geometry import polygon_self_intersects
+
+    status = polygon_self_intersects(clip_poly)
+    if status != "non_intersecting":
+        raise ValueError(f"clip_polygon rejected: {status}")
+    return clip_poly, (
+        int(math.floor(clip_poly[:, 0].min())),
+        int(math.floor(clip_poly[:, 1].min())),
+        int(math.ceil(clip_poly[:, 0].max())) - 1,
+        int(math.ceil(clip_poly[:, 1].max())) - 1,
+    )
+
+
 def run_hillshade(
     spark: SparkSession,
     images: DataFrame,
@@ -946,12 +641,10 @@ def run_hillshade(
     script: str = pipeline.DEFAULT_SCRIPT,
     output_dir: str | None = None,
     resume: bool = True,
-    salt_buckets: int | None = None,
     clip_polygon=None,
     shade_partitions: int | None = None,
     prefilter: str | None = None,
     png_level: int | None = None,
-    local_dedup: bool = False,
 ) -> DataFrame:
     """images table → shaded PNG tiles.
 
@@ -959,99 +652,53 @@ def run_hillshade(
     read back from the sink (the checkpoint manifest) and anti-joined
     out of the input — re-running after a failure only shades the
     missing tiles (ImportSrtmTilesCommand.fs:110-124 semantics).
-    ``salt_buckets`` switches to two-phase salted assembly for inputs
-    with heavy per-tile skew (see :func:`assemble_parts_salted`).
     ``clip_polygon`` — sequence of (lon, lat) vertices: tiles outside
     the polygon's bbox are pruned with a Catalyst predicate before the
-    shuffle (floor/ceil−1 cover rule, Dem/Funcs.fs:284-298) and pixels
-    outside the polygon render transparent (per-band vectorized
-    point-in-polygon clip, SURVEY.md §2.3 J9).
+    shuffle (:func:`clip_cover`) and pixels outside the polygon render
+    transparent (per-band vectorized point-in-polygon clip, SURVEY.md
+    §2.3 J9).
     ``prefilter`` — height low/high-pass step script (``"blur"``,
     ``"sharpen(amount=…)"``; Roadmap.md filters) applied before the
     Horn gradient; widens the halo exchange by one ring per step.
     """
     clip_poly = None
     if clip_polygon is not None:
-        clip_poly = np.asarray(clip_polygon, dtype=np.float64)
-        # validate before any work is scheduled: a self-intersecting clip
-        # polygon would silently mis-clip under the crossing-number rule
-        # (PolygonSelfIntersection.fs sweep semantics)
-        from .geometry import polygon_self_intersects
-
-        status = polygon_self_intersects(clip_poly)
-        if status != "non_intersecting":
-            raise ValueError(f"clip_polygon rejected: {status}")
+        clip_poly, (tx0, ty0, tx1, ty1) = clip_cover(clip_polygon)
     halo = 1 + (len(pipeline.parse_script(prefilter)) if prefilter else 0)
-    assigned = parse_caption(images)
-    if local_dedup:
-        # duplicate-heavy sources: collapse losing duplicate blocks
-        # before anything is emitted or shuffled (byte-identical output)
-        assigned = dedup_duplicate_blocks(assigned)
-    if salt_buckets and salt_buckets > 1:
-        # two-phase salted assembly for pathological per-tile skew keeps
-        # the two-stage topology (partial mosaics need their own shuffle)
-        parts = assemble_parts_salted(
-            assigned, tile_size, salt_buckets, halo=halo
+    parts = hillshade_parts(parse_caption(images), tile_size, halo)
+    if clip_poly is not None:
+        # prune DESTINATION tiles to the polygon's bbox cover.  The
+        # filter sits above the block/strip union: it pushes down to the
+        # scan on the block arm (the full-data one), while strips donated
+        # by just-outside tiles into kept boundary tiles survive — the
+        # clipped result stays pixel-identical to clipping the unpruned
+        # output.
+        parts = parts.where(
+            (F.col("tile_x") >= tx0) & (F.col("tile_x") <= tx1)
+            & (F.col("tile_y") >= ty0) & (F.col("tile_y") <= ty1)
         )
-        if clip_poly is not None:
-            tx0 = int(math.floor(clip_poly[:, 0].min()))
-            tx1 = int(math.ceil(clip_poly[:, 0].max())) - 1
-            ty0 = int(math.floor(clip_poly[:, 1].min()))
-            ty1 = int(math.ceil(clip_poly[:, 1].max())) - 1
-            parts = parts.where(
-                (F.col("tile_x") >= tx0) & (F.col("tile_x") <= tx1)
-                & (F.col("tile_y") >= ty0) & (F.col("tile_y") <= ty1)
+    if output_dir is not None and resume:
+        done = _read_manifest(spark, output_dir)
+        if done is not None:
+            # anti-join on the DESTINATION tile key, after strip
+            # emission: completed tiles still contribute halo strips
+            # to incomplete neighbors (dropping them earlier would
+            # corrupt resumed edges)
+            parts = parts.join(
+                F.broadcast(done), on=["tile_x", "tile_y"], how="left_anti"
             )
-        if output_dir is not None and resume:
-            done = _read_manifest(spark, output_dir)
-            if done is not None:
-                parts = parts.join(
-                    F.broadcast(done), on=["tile_x", "tile_y"], how="left_anti"
-                )
-        shaded = shade_parts(
-            parts, tile_size, script, clip_poly=clip_poly,
-            halo=halo, prefilter=prefilter, png_level=png_level,
-        )
-    else:
-        parts = hillshade_parts(assigned, tile_size, halo)
-        if clip_poly is not None:
-            # prune DESTINATION tiles to the polygon's bbox cover
-            # (floor/ceil−1 rule, Dem/Funcs.fs:284-298).  The filter sits
-            # above the block/strip union: it pushes down to the scan on
-            # the block arm (the full-data one), while strips donated by
-            # just-outside tiles into kept boundary tiles survive — the
-            # clipped result stays pixel-identical to clipping the
-            # unpruned output.
-            tx0 = int(math.floor(clip_poly[:, 0].min()))
-            tx1 = int(math.ceil(clip_poly[:, 0].max())) - 1
-            ty0 = int(math.floor(clip_poly[:, 1].min()))
-            ty1 = int(math.ceil(clip_poly[:, 1].max())) - 1
-            parts = parts.where(
-                (F.col("tile_x") >= tx0) & (F.col("tile_x") <= tx1)
-                & (F.col("tile_y") >= ty0) & (F.col("tile_y") <= ty1)
-            )
-        if output_dir is not None and resume:
-            done = _read_manifest(spark, output_dir)
-            if done is not None:
-                # anti-join on the DESTINATION tile key, after strip
-                # emission: completed tiles still contribute halo strips
-                # to incomplete neighbors (dropping them earlier would
-                # corrupt resumed edges)
-                parts = parts.join(
-                    F.broadcast(done), on=["tile_x", "tile_y"], how="left_anti"
-                )
-        # pre-partition the one full-data exchange on the tile key at
-        # finer granularity than spark.sql.shuffle.partitions: the shade
-        # stage is CPU-bound per TILE, so ~1 tile/task bounds straggler
-        # cost to one tile (measured +15% at sf0.1/local[32]).  The
-        # following groupBy reuses this hash partitioning — no second
-        # exchange.  Callers with a known tile count should pass it.
-        n_parts = shade_partitions or spark.sparkContext.defaultParallelism * 4
-        parts = parts.repartition(n_parts, "tile_x", "tile_y")
-        shaded = shade_unified(
-            parts, tile_size, script, clip_poly=clip_poly,
-            halo=halo, prefilter=prefilter, png_level=png_level,
-        )
+    # pre-partition the one full-data exchange on the tile key at
+    # finer granularity than spark.sql.shuffle.partitions: the shade
+    # stage is CPU-bound per TILE, so ~1 tile/task bounds straggler
+    # cost to one tile (measured +15% at sf0.1/local[32]).  The
+    # following groupBy reuses this hash partitioning — no second
+    # exchange.  Callers with a known tile count should pass it.
+    n_parts = shade_partitions or spark.sparkContext.defaultParallelism * 4
+    parts = parts.repartition(n_parts, "tile_x", "tile_y")
+    shaded = shade_unified(
+        parts, tile_size, script, clip_poly=clip_poly,
+        halo=halo, prefilter=prefilter, png_level=png_level,
+    )
     if output_dir is not None:
         shaded.write.mode("append").parquet(output_dir)
         return spark.read.parquet(output_dir)

@@ -379,9 +379,9 @@ def streaming_hillshade(
     """Streaming twin of the fused batch topology: incremental
     hillshade with cross-batch halo exchange, one stateful operator.
 
-    A narrow ``mapInPandas`` turns each micro-batch of image rows into
-    the same destination-keyed parts stream as the batch
-    :func:`demeton_spark.engine.hillshade_parts` (raw blocks + 1-px
+    Each micro-batch of image rows becomes the batch path's
+    destination-keyed parts stream
+    (:func:`demeton_spark.engine.hillshade_parts`: raw blocks + k-px
     strips cut from border blocks).  One ``applyInPandasWithState``
     keyed by destination tile buffers parts across micro-batches and
     shades the tile EXACTLY ONCE when both its own block grid and every
@@ -397,99 +397,43 @@ def streaming_hillshade(
     accumulates for them) and prefilters widen the buffered strips to
     k px.
     """
-    import numpy as np
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+    from . import codec
     from .engine import (
         _BLOCK_STRIP_SPEC,
-        _decode_block,
-        _place_strip,
+        _shade_tile_parts,
         _tile_name,
-        shade_padded_block,
+        clip_cover,
+        hillshade_parts,
+        parse_caption,
     )
-    from .pipeline import parse_script
-    from .tiles import DEM_HEIGHT_NONE
+    from .pipeline import SHADER_REGISTRY, parse_script
 
     steps = parse_script(script)
-    from .pipeline import SHADER_REGISTRY
-
     registry = dict(SHADER_REGISTRY)  # driver snapshot for executors
-    from . import codec as _codec
-    lvl = _codec.RGBA_PNG_LEVEL if png_level is None else png_level
+    lvl = codec.RGBA_PNG_LEVEL if png_level is None else png_level
     pre_steps = parse_script(prefilter) if prefilter else []
     halo = 1 + len(pre_steps)
-    clip_poly = None
-    if clip_polygon is not None:
-        clip_poly = np.asarray(clip_polygon, dtype=np.float64)
-        # validate before any work is scheduled: a self-intersecting clip
-        # polygon would silently mis-clip under the crossing-number rule
-        # (PolygonSelfIntersection.fs sweep semantics)
-        from .geometry import polygon_self_intersects
-
-        status = polygon_self_intersects(clip_poly)
-        if status != "non_intersecting":
-            raise ValueError(f"clip_polygon rejected: {status}")
     wx0, wy0, wx1, wy1 = world_bounds  # sender existence universe
     tx0, ty0, tx1, ty1 = world_bounds  # destination (kept-tile) universe
-    if clip_poly is not None:
-        import math as _math
-
+    clip_poly = None
+    if clip_polygon is not None:
+        clip_poly, (cx0, cy0, cx1, cy1) = clip_cover(clip_polygon)
         # destinations shrink to the polygon's bbox cover (state never
         # accumulates for clipped-out tiles) but SENDERS keep the full
         # world bounds: a tile just outside the clip cover still donates
         # halo strips to kept boundary tiles, exactly like the batch
         # path's destination-only filter — completeness must wait for
         # those strips or boundary pixels would shade nondeterministically
-        tx0 = max(tx0, int(_math.floor(clip_poly[:, 0].min())))
-        tx1 = min(tx1, int(_math.ceil(clip_poly[:, 0].max())) - 1)
-        ty0 = max(ty0, int(_math.floor(clip_poly[:, 1].min())))
-        ty1 = min(ty1, int(_math.ceil(clip_poly[:, 1].max())) - 1)
+        tx0, ty0 = max(tx0, cx0), max(ty0, cy0)
+        tx1, ty1 = min(tx1, cx1), min(ty1, cy1)
 
-    def emit_parts(batches):
-        cols = ("tile_x", "tile_y", "part", "bx", "by", "image_id",
-                "w", "h", "fmt", "data")
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in cols}
-
-            def push(tx, ty, part, bx, by, iid, w, h, fmt, data):
-                out["tile_x"].append(tx)
-                out["tile_y"].append(ty)
-                out["part"].append(part)
-                out["bx"].append(bx)
-                out["by"].append(by)
-                out["image_id"].append(iid)
-                out["w"].append(w)
-                out["h"].append(h)
-                out["fmt"].append(fmt)
-                out["data"].append(data)
-
-            for r in pdf.itertuples():
-                w, h, bx, by = int(r.w), int(r.h), int(r.bx), int(r.by)
-                if tx0 <= int(r.tile_x) <= tx1 and ty0 <= int(r.tile_y) <= ty1:
-                    push(int(r.tile_x), int(r.tile_y), "B", bx, by,
-                         str(r.image_id), w, h, str(r.fmt), bytes(r.bytes))
-                nx, ny = tile_size // w, tile_size // h
-                block = None
-                for on_edge, (dx, dy), part, cut in _BLOCK_STRIP_SPEC:
-                    if not on_edge(bx, by, nx, ny):
-                        continue
-                    dtx, dty = int(r.tile_x) + dx, int(r.tile_y) + dy
-                    if not (tx0 <= dtx <= tx1 and ty0 <= dty <= ty1):
-                        continue  # strips past the world/clip edge
-                    if block is None:
-                        block = _decode_block(str(r.fmt), bytes(r.bytes), w)
-                    push(dtx, dty, part, bx, by, str(r.image_id), w, h,
-                         "raw",
-                         np.ascontiguousarray(cut(block, halo)).tobytes())
-            yield pd.DataFrame(out)
-
-    from .engine import parse_caption
-
-    parts = parse_caption(images).mapInPandas(
-        emit_parts,
-        schema=("tile_x int, tile_y int, part string, bx int, by int, "
-                "image_id string, w int, h int, fmt string, data binary"),
+    # the batch parts stream, with destinations cut to the kept-tile
+    # universe: strips sent past the world/clip edge never reach state
+    parts = hillshade_parts(parse_caption(images), tile_size, halo).where(
+        F.col("tile_x").between(tx0, tx1) & F.col("tile_y").between(ty0, ty1)
     )
 
     def expected_strips(tx: int, ty: int, nx: int, ny: int) -> set:
@@ -542,41 +486,21 @@ def streaming_hillshade(
                 or not expected_strips(tx, ty, nx, ny) <= have_strips):
             state.update((False, parts_l, bxs, bys, ids, fmts, ws, hs, blobs))
             return
-        k = halo
-        padded = np.full((ts + 2 * k, ts + 2 * k), DEM_HEIGHT_NONE,
-                         dtype=np.int16)
-        order = sorted(range(len(parts_l)),
-                       key=lambda i: (bys[i], bxs[i], ids[i]))
-        n_blocks = 0
-        for i in order:
-            if parts_l[i] != "B":
-                continue
-            block = _decode_block(fmts[i], blobs[i], ws[i])
-            y0, x0 = k + bys[i] * hs[i], k + bxs[i] * ws[i]
-            padded[y0 : y0 + hs[i], x0 : x0 + ws[i]] = block
-            n_blocks += 1
-        for i in order:
-            if parts_l[i] == "B":
-                continue
-            cells = np.frombuffer(blobs[i], dtype="<i2")
-            _place_strip(padded, parts_l[i], cells, bxs[i], bys[i],
-                         ws[i], hs[i], ts, k)
-        if pre_steps:
-            from .engine import apply_prefilters
-
-            padded = apply_prefilters(padded, pre_steps)
-        from . import codec
-
-        rgba, shaded = shade_padded_block(padded, tx, ty, ts, steps,
-                                          clip_poly=clip_poly,
-                                          registry=registry)
+        tile_parts = pd.DataFrame({
+            "part": parts_l, "bx": bxs, "by": bys, "image_id": ids,
+            "w": ws, "h": hs, "fmt": fmts, "data": blobs,
+        })
+        png, shaded, n_blocks = _shade_tile_parts(
+            tile_parts, tx, ty, ts, steps, pre_steps, clip_poly, registry,
+            lvl,
+        )
         state.update((True, [], [], [], [], [], [], [], []))
         yield pd.DataFrame(
             {
                 "tile_x": [tx],
                 "tile_y": [ty],
                 "tile_name": [_tile_name(0, tx, ty)],
-                "png": [codec.encode_rgba_png(rgba, lvl)],
+                "png": [png],
                 "shaded_px": [shaded],
                 "total_px": [ts * ts],
                 "n_blocks": [n_blocks],

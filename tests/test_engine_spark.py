@@ -58,24 +58,6 @@ def test_assembled_tiles_match_numpy_oracle(spark, images):
         )
 
 
-def test_halo_exchange_pads_with_neighbors(spark, images):
-    tiles = engine.assemble_tiles(engine.parse_caption(images), SPEC.tile_size)
-    padded = {(r["tile_x"], r["tile_y"]): r for r in
-              engine.exchange_halo(tiles, SPEC.tile_size).collect()}
-    assert len(padded) == 4
-    ts = SPEC.tile_size
-    world = synth.expected_world_heights(SPEC)
-    # tile (13,45) is the SW tile: its north pad row must equal the
-    # south edge row of tile (13,46); its west pad must be missing.
-    p = np.frombuffer(padded[(13, 45)]["padded"], dtype="<i2").reshape(ts + 2, ts + 2)
-    assert np.array_equal(p[1:-1, 1:-1], world[:ts, :ts])
-    assert np.array_equal(p[-1, 1:-1], world[ts, :ts])  # north halo row
-    assert np.array_equal(p[1:-1, -1], world[:ts, ts])  # east halo col
-    assert np.all(p[0, :] == DEM_HEIGHT_NONE)  # world edge: south
-    assert np.all(p[:, 0] == DEM_HEIGHT_NONE)  # world edge: west
-    assert p[-1, -1] == world[ts, ts]  # NE corner from diagonal neighbor
-
-
 def test_tiled_shading_equals_untiled_oracle(spark, images):
     """The flagship parity property: tiling + halo == one merged array."""
     shaded = engine.run_hillshade(
@@ -191,33 +173,6 @@ def test_resume_over_unreadable_sink_fails_before_writing(spark, images, tmp_pat
     assert [p.name for p in out.iterdir()] == ["part-00000.parquet"]
 
 
-def test_salted_assembly_matches_unsalted(spark):
-    """Two-phase salted assembly (skew path) must be byte-identical to
-    the plain groupBy(tile) stitch, including lineage counts."""
-    skewed = synth.WorldSpec(
-        lon0=13, lat0=45, n_tiles_x=2, n_tiles_y=2,
-        tile_size=30, block_size=10, skew_factor=8, skew_every=2,
-    )
-    images_sk = synth.images_df(spark, skewed, num_partitions=4)
-    plain = engine.run_hillshade(spark, images_sk, skewed.tile_size)
-    salted = engine.run_hillshade(
-        spark, images_sk, skewed.tile_size, salt_buckets=4
-    )
-    canon = lambda df: {  # noqa: E731
-        (r["tile_x"], r["tile_y"]): (
-            bytes(r["png"]), r["shaded_px"], r["n_blocks"]
-        )
-        for r in df.collect()
-    }
-    a, b = canon(plain), canon(salted)
-    assert a.keys() == b.keys() and len(a) == 4
-    assert a == b
-    # skewed tiles really carry the duplicate rows in their lineage count
-    n_blocks = {k: v[2] for k, v in a.items()}
-    assert max(n_blocks.values()) == 8 * skewed.blocks_per_tile
-    assert min(n_blocks.values()) == skewed.blocks_per_tile
-
-
 def test_tile_shade_xth_water_pipeline(spark):
     """XTH tiles (heights + water bit) through the tile-shade pipeline:
     water pixels get the water color, land gets hillshade, and the
@@ -323,31 +278,6 @@ def test_polygon_clip_tiled_equals_untiled_oracle(spark, images):
         )
         total_visible += r["shaded_px"]
     assert 0 < total_visible < 2 * ts * ts  # genuinely clipped
-
-
-def test_polygon_clip_salted_path_matches_fused(spark, images):
-    """clip_polygon must behave identically through the salted two-phase
-    assembly topology."""
-    poly = [(13.1, 45.2), (13.9, 45.4), (13.3, 46.7)]
-    fused = {
-        (r["tile_x"], r["tile_y"]): (bytes(r["png"]), r["shaded_px"])
-        for r in engine.run_hillshade(
-            spark, images, SPEC.tile_size, script="elecolor|+igor",
-            clip_polygon=poly,
-        ).collect()
-    }
-    salted = {
-        (r["tile_x"], r["tile_y"]): (bytes(r["png"]), r["shaded_px"])
-        for r in engine.run_hillshade(
-            spark, images, SPEC.tile_size, script="elecolor|+igor",
-            clip_polygon=poly, salt_buckets=3,
-        ).collect()
-    }
-    assert set(fused) == set(salted)
-    for k in fused:
-        assert codec.decode_rgba_png(fused[k][0]).tobytes() == \
-            codec.decode_rgba_png(salted[k][0]).tobytes()
-        assert fused[k][1] == salted[k][1]
 
 
 def test_blur_prefilter_tiled_equals_untiled(spark, images):
@@ -459,12 +389,20 @@ def test_custom_shader_registry_reaches_executors(spark, images):
         # skewed duplicates + fine grid
         WorldSpec(lon0=13, lat0=45, n_tiles_x=2, n_tiles_y=2,
                   tile_size=30, block_size=10, skew_factor=4),
+        # one hot tile: 64 copies of every block of tile 0, all in one
+        # grouped task (winner-only decode keeps it one decode/position)
+        WorldSpec(lon0=13, lat0=45, n_tiles_x=2, n_tiles_y=2,
+                  tile_size=30, block_size=10, skew_factor=64,
+                  skew_every=4),
     ],
-    ids=["single-block-tiles", "fine-grid", "nonsquare-world", "skewed"],
+    ids=["single-block-tiles", "fine-grid", "nonsquare-world", "skewed",
+         "hot-tile"],
 )
 def test_tiled_parity_across_world_shapes(spark, spec):
     """Fused single-shuffle pipeline == untiled oracle for every world
-    shape (block==tile, fine grids, non-square, duplicate-heavy)."""
+    shape (block==tile, fine grids, non-square, duplicate-heavy), and
+    every tile's ``n_blocks`` lineage counts all its input rows,
+    duplicates included."""
     shaded = engine.run_hillshade(
         spark, synth.images_df(spark, spec), spec.tile_size,
         script="elecolor|+igor",
@@ -482,6 +420,9 @@ def test_tiled_parity_across_world_shapes(spark, spec):
         assert np.array_equal(rgba, oracle[y0 : y0 + ts, x0 : x0 + ts]), (
             f"tile ({r['tile_x']},{r['tile_y']}) mismatch for {spec}"
         )
+        dup = spec.skew_factor if spec.tile_is_skewed(
+            ty_i * spec.n_tiles_x + tx_i) else 1
+        assert r["n_blocks"] == dup * spec.blocks_per_tile
 
 
 def test_parse_caption_southern_western_hemispheres(spark):
@@ -519,67 +460,3 @@ def test_empty_input_produces_no_tiles(spark):
         "caption string, phash long",
     )
     assert engine.run_hillshade(spark, empty, 30).count() == 0
-
-
-def test_prefilter_salted_path_matches_fused(spark, images):
-    """blur prefilter (2-px halo) through the salted two-phase topology
-    must be pixel-identical to the fused single-shuffle path."""
-    fused = {
-        (r["tile_x"], r["tile_y"]): (bytes(r["png"]), r["shaded_px"])
-        for r in engine.run_hillshade(
-            spark, images, SPEC.tile_size, script="elecolor|+igor",
-            prefilter="blur",
-        ).collect()
-    }
-    salted = {
-        (r["tile_x"], r["tile_y"]): (bytes(r["png"]), r["shaded_px"])
-        for r in engine.run_hillshade(
-            spark, images, SPEC.tile_size, script="elecolor|+igor",
-            prefilter="blur", salt_buckets=3,
-        ).collect()
-    }
-    assert set(fused) == set(salted)
-    for k in fused:
-        assert codec.decode_rgba_png(fused[k][0]).tobytes() == \
-            codec.decode_rgba_png(salted[k][0]).tobytes()
-        assert fused[k][1] == salted[k][1]
-
-
-def test_local_dedup_byte_identical_and_collapses(spark):
-    """Pre-shuffle duplicate collapse (local_dedup=True) must be
-    byte-identical to the post-shuffle winner-only path on a
-    duplicate-heavy world, and must actually drop losing duplicates
-    before the exchange."""
-    from demeton_spark.engine import dedup_duplicate_blocks, parse_caption
-    from demeton_spark.synth import WorldSpec, images_df
-
-    spec = WorldSpec(
-        lon0=13, lat0=45, n_tiles_x=2, n_tiles_y=2, tile_size=60,
-        block_size=20, skew_factor=4, skew_every=2,
-    )
-    imgs = images_df(spark, spec, num_partitions=4)
-    base = {
-        (r["tile_x"], r["tile_y"]): (bytes(r["png"]), r["shaded_px"])
-        for r in engine.run_hillshade(
-            spark, imgs, spec.tile_size, script="elecolor|+igor"
-        ).collect()
-    }
-    dedup = {
-        (r["tile_x"], r["tile_y"]): (bytes(r["png"]), r["shaded_px"])
-        for r in engine.run_hillshade(
-            spark, imgs, spec.tile_size, script="elecolor|+igor",
-            local_dedup=True,
-        ).collect()
-    }
-    assert set(base) == set(dedup)
-    for k in base:
-        assert codec.decode_rgba_png(base[k][0]).tobytes() == \
-            codec.decode_rgba_png(dedup[k][0]).tobytes()
-        assert base[k][1] == dedup[k][1]
-    # the collapse is real: duplicates vanish from the parts stream
-    n_raw = parse_caption(imgs).count()
-    n_dedup = dedup_duplicate_blocks(parse_caption(imgs)).count()
-    # collapse granularity is the Arrow batch, so cross-batch
-    # duplicates may survive — but most of the 4x duplication must go
-    assert n_raw == spec.n_rows
-    assert n_dedup <= n_raw * 0.6

@@ -57,13 +57,13 @@ def test_full_pyramid_matches_world_oracle(spark, tmp_path):
         assert (tmp_path / "pyr" / f"level={level}" / "_SUCCESS").exists()
 
 
-def test_hillshade_job_cli(tmp_path):
+def _run_hillshade_job(tmp_path, *extra: str) -> dict:
     out = str(tmp_path / "job_out")
     proc = subprocess.run(
         [
             sys.executable, "jobs/hillshade_job.py",
             "--synthetic", "sf0.001", "--output", out,
-            "--master", "local[4]",
+            "--master", "local[4]", *extra,
         ],
         capture_output=True, text=True, timeout=300, cwd="/root/repo",
     )
@@ -72,3 +72,17 @@ def test_hillshade_job_cli(tmp_path):
     assert summary["tiles"] == 4
     assert summary["total_px"] == 4 * 600 * 600
     assert summary["blocks_consumed"] == 4 * 36
+    return summary
+
+
+def test_hillshade_job_cli(tmp_path):
+    _run_hillshade_job(tmp_path)
+
+
+def test_hillshade_job_cli_clip_and_prefilter(tmp_path):
+    # the triangle's bbox covers all 4 tiles; pixels outside it clip away
+    summary = _run_hillshade_job(
+        tmp_path, "--clip-polygon", "0.1,40.1;1.9,40.3;0.5,41.9",
+        "--prefilter", "blur",
+    )
+    assert summary["shaded_px"] < summary["total_px"]

@@ -289,6 +289,7 @@ def test_streaming_hillshade_clip_and_prefilter_match_batch(spark, tmp_path):
         assert codec.decode_rgba_png(bytes(got[k]["png"])).tobytes() == \
             codec.decode_rgba_png(bytes(batch[k]["png"])).tobytes()
         assert got[k]["shaded_px"] == batch[k]["shaded_px"]
+        assert got[k]["n_blocks"] == batch[k]["n_blocks"]
 
 
 def test_streaming_exact_dedup_matches_batch_keep_list(spark, tmp_path):

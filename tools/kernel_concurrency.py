@@ -67,8 +67,9 @@ def _work(args: tuple[int, int]) -> tuple[float, float, float]:
 
 def main() -> None:
     from bench import probe_steal
+    from demeton_spark import engine
 
-    band = int(os.environ.get("DEMETON_SHADE_BAND_ROWS", "128"))
+    band = engine.SHADE_BAND_ROWS
     levels = (1, 8, 32)
     rounds = 3
     tiles_per_proc = 4
