@@ -10,6 +10,7 @@ sorted, values canonicalized).  Usage:
 
 from __future__ import annotations
 
+import re
 import sys
 
 import duckdb
@@ -59,6 +60,34 @@ def compare(name: str, spark_pdf: pd.DataFrame, duck_pdf: pd.DataFrame) -> list[
     return problems
 
 
+def duck_tables(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """A DuckDB connection with one view per contract table of ``sf_dir``."""
+    con = duckdb.connect()
+    for t in TABLES:
+        con.sql(
+            f"create view {t} as select * from read_parquet('{sf_dir}/{t}.parquet')"
+        )
+    return con
+
+
+def contract_oracles(sf_dir: str) -> dict[str, str]:
+    """``oracle_sql()`` for the tables in ``sf_dir``.
+
+    Fixture-pinned oracles carry the driver's sf0.01 parquet path in
+    their contract strings; they are regenerated for the sf under test
+    (the Spark side materializes the fixture before the oracle runs).
+    """
+    import __spark_entry__ as entrymod
+    from demeton_spark.queries import FIXTURE_ORACLES
+
+    oracles = entrymod.oracle_sql()
+    m = re.search(r"sf([0-9.]+)", sf_dir)
+    sf = float(m.group(1)) if m else 0.01
+    if sf != 0.01:
+        oracles = {**oracles, **{k: fn(sf) for k, fn in FIXTURE_ORACLES.items()}}
+    return oracles
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
@@ -66,26 +95,10 @@ def main() -> int:
     import __spark_entry__ as entrymod
     from demeton_spark.session import build_session
 
-    spark = build_session(app_name="oracle-check", master="local[8]")
-    con = duckdb.connect()
-    for t in TABLES:
-        con.sql(
-            f"create view {t} as select * from read_parquet('{sf_dir}/{t}.parquet')"
-        )
-
+    spark = build_session(app_name="oracle-check", master="local[*]")
+    con = duck_tables(sf_dir)
     queries = entrymod.queries()
-    oracles = entrymod.oracle_sql()
-    # fixture-pinned oracles carry the driver's sf0.01 parquet path in
-    # their contract strings; regenerate them for the sf under test
-    # (the Spark side materializes the fixture before the oracle runs)
-    import re as _re
-
-    from demeton_spark.queries import FIXTURE_ORACLES
-
-    m = _re.search(r"sf([0-9.]+)", sf_dir)
-    sf = float(m.group(1)) if m else 0.01
-    if sf != 0.01:
-        oracles = {**oracles, **{k: fn(sf) for k, fn in FIXTURE_ORACLES.items()}}
+    oracles = contract_oracles(sf_dir)
     failures = 0
     for name, fn in queries.items():
         if only and name not in only:
