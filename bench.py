@@ -1,30 +1,29 @@
 #!/usr/bin/env python
 """Benchmark: end-to-end hillshade throughput + headline contract queries.
 
-Default mode (what the driver runs per round):
-    SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=32 python bench.py
+    SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=4 python bench.py
+
 prints ONE JSON line:
     {"metric": ..., "value": <total sec>, "unit": "sec",
-     "queries": {...per-query sec...}, "sf": 0.1, ...}
+     "queries": {...slowest per-query sec...}, "sf": 0.1, ...}
+and writes every per-query timing to ``BENCH/QUERIES_rNN.json``.
 
-Scaling-evidence mode (BASELINE.json north_rule — N vs 4N executors,
-proxied by local[8] vs local[32] on the same input):
-    python bench.py --scaling
-runs the identical hillshade job at both parallelism levels and writes
-BENCH/BASELINE.md with throughputs and the scaling efficiency.
-
-The hillshade input is the deterministic synthetic image table
+The hillshade leg runs the job's own path (``jobs.hillshade_job.run``:
+the job's PNG level, a fresh parquet sink per trial, the resume-manifest
+read and the job's summary aggregate), so its number is what the job
+ships.  The input is the deterministic synthetic image table
 (demeton_spark.synth), generated once per SF into data/synth/ and
 reused; generation time is excluded from the measured pipeline time.
 """
 
 from __future__ import annotations
 
-import argparse
 import json
 import os
+import shutil
 import statistics
 import sys
+import tempfile
 import time
 
 REPO = os.path.dirname(os.path.abspath(__file__))
@@ -41,12 +40,12 @@ WORLD_BY_SF = {
                     tile_size=1800, block_size=300),
     0.1: WorldSpec(lon0=0, lat0=40, n_tiles_x=20, n_tiles_y=20,
                    tile_size=1800, block_size=300),
-    # weak-scaling ladder (--weak-scaling): side grows with sqrt(sf)
-    0.33: WorldSpec(lon0=0, lat0=40, n_tiles_x=36, n_tiles_y=36,
-                    tile_size=1800, block_size=300),
     1.0: WorldSpec(lon0=0, lat0=40, n_tiles_x=63, n_tiles_y=63,
                    tile_size=1800, block_size=300),
 }
+
+#: timed runs per measurement; the headline is their median
+TRIALS = 3
 
 HEADLINE_QUERIES = [
     "tile_assign_events",
@@ -130,89 +129,6 @@ def probe_steal(seconds: float = 2.0) -> float:
         return -1.0
 
 
-def probe_kernel(reference_sec: float = 0.28) -> dict:
-    """Single-process shade+encode of one 1800² tile, vs a known-quiet
-    reference.
-
-    /proc/stat steal misses one of this host's degradation modes: two
-    r4 sf1.0 attempts double-probed 0.15-0.28% steal yet ran 2.3-2.6×
-    the best wall, with the untimed warm-up itself 2.5× slow —
-    co-tenant memory-bandwidth pressure that steals no CPU time.  The
-    kernel probe measures the thing that actually varies (per-tile
-    kernel wall) in ~1 s; slowdown ≈ 1.0 means a clean window.
-    ``reference_sec`` is the quietest single-process shade-only
-    per-tile time measured on this host
-    (BENCH/KERNEL_CONCURRENCY.json level "1" ``shade_sec``)."""
-    try:
-        import numpy as np
-
-        from demeton_spark import engine, pipeline
-        from demeton_spark.synth import WorldSpec, expected_world_heights
-
-        tile = 1800
-        spec = WorldSpec(lon0=0, lat0=40, n_tiles_x=1, n_tiles_y=1,
-                         tile_size=tile, block_size=300)
-        world = expected_world_heights(spec)
-        padded = np.full((tile + 2, tile + 2), -32768, dtype=np.int16)
-        padded[1:-1, 1:-1] = world
-        steps = pipeline.parse_script("elecolor|+igor")
-        engine.shade_padded_block(padded, 0, 40, tile, steps)  # warm
-        t0 = time.time()
-        engine.shade_padded_block(padded, 0, 40, tile, steps)
-        sec = time.time() - t0
-        out = {"per_tile_sec": round(sec, 4),
-               "slowdown_vs_quiet": round(sec / reference_sec, 2)}
-        # 8-way concurrent leg: the r4 degradation mode is invisible
-        # single-threaded (probe read 0.83× while a 32-way run was
-        # 2.3× slow) — it is parallel memory-bandwidth pressure, so
-        # probe under parallel load.  spawn context, not fork: the
-        # --scaling/--weak-scaling "after" probes run in a driver that
-        # has hosted py4j/JVM-adjacent threads, and fork() from a
-        # multithreaded process can deadlock the children — a hang the
-        # except-guard cannot catch (ADVICE r4).  Each child rebuilds
-        # its own tile and warms before its ONE timed shade, matching
-        # tools/kernel_concurrency.py, whose level-8 shade_sec is the
-        # reference this leg is compared against.
-        import multiprocessing as mp
-
-        ctx = mp.get_context("spawn")
-        t0 = time.time()
-        with ctx.Pool(8) as pool:
-            secs = pool.map(_probe_kernel_child, [tile] * 8)
-        out["per_tile_sec_8way"] = round(max(secs), 4)
-        out["slowdown_vs_quiet_8way"] = round(
-            max(secs) / KERNEL_8WAY_REFERENCE_SEC, 2)
-        out["wall_8way"] = round(time.time() - t0, 4)
-        return out
-    except Exception:
-        return {}
-
-
-# quietest 8-process shade-only per-tile time on this host
-# (BENCH/KERNEL_CONCURRENCY.json level "8" shade_sec)
-KERNEL_8WAY_REFERENCE_SEC = 0.27
-
-
-def _probe_kernel_child(tile: int) -> float:
-    # spawn child: imports + tile synthesis + warm shade happen here
-    # (untimed); only the second shade is measured.
-    import numpy as np
-
-    from demeton_spark import engine, pipeline
-    from demeton_spark.synth import WorldSpec, expected_world_heights
-
-    spec = WorldSpec(lon0=0, lat0=40, n_tiles_x=1, n_tiles_y=1,
-                     tile_size=tile, block_size=300)
-    world = expected_world_heights(spec)
-    padded = np.full((tile + 2, tile + 2), -32768, dtype=np.int16)
-    padded[1:-1, 1:-1] = world
-    steps = pipeline.parse_script("elecolor|+igor")
-    engine.shade_padded_block(padded, 0, 40, tile, steps)  # warm
-    t0 = time.time()
-    engine.shade_padded_block(padded, 0, 40, tile, steps)
-    return time.time() - t0
-
-
 def sf_of_dir(sf_dir: str) -> float:
     base = os.path.basename(sf_dir.rstrip("/"))
     try:
@@ -244,76 +160,57 @@ def ensure_synth_table(spark, spec: WorldSpec, sf: float,
     return path
 
 
-def run_hillshade_bench(spark, spec: WorldSpec, images_path: str,
-                        trials: int = 4) -> dict:
-    """Measure the full pipeline: read → assign → assemble → halo → shade.
-
-    Forces execution with a metrics aggregate (no PNG collection to the
-    driver — at scale the sink is a distributed write).
-
-    Session warm-up (codegen JIT + per-worker numpy import) is NOT
-    handled here: bench_once's ``warmup`` flag runs one small untimed
-    sf0.01 hillshade first and records its wall as ``warmup_sec``."""
-    from pyspark.sql import functions as F
-
-    from demeton_spark import codec
-    from demeton_spark.engine import run_hillshade
+def run_hillshade_bench(spark, spec: WorldSpec, images_path: str) -> dict:
+    """Time ``TRIALS`` runs of the job's path, each into a fresh sink
+    that is removed after the trial.  ``shade_partitions`` is the tile
+    count, what ``--shade-partitions`` would pass for this world."""
+    from jobs.hillshade_job import run
 
     images = spark.read.parquet(images_path)
-    times, agg = [], None
-    for _ in range(trials):  # n trials: the sandbox has heavy
-        t0 = time.time()  # CPU-steal variance (3× between trials)
-        shaded = run_hillshade(
-            spark, images, spec.tile_size, script="elecolor|+igor",
-            # tile count is known for the synthetic world: 1 tile/task
-            # keeps task sizes equal at every parallelism level
-            shade_partitions=spec.n_tiles_x * spec.n_tiles_y,
-            # throughput metric: fast deflate for the bench sink only —
-            # persisted job output defaults to the reference's level 6
-            png_level=codec.RGBA_PNG_LEVEL_FAST,
-        )
-        agg = shaded.agg(
-            F.count("*").alias("tiles"),
-            F.sum("shaded_px").alias("shaded_px"),
-            F.sum("total_px").alias("total_px"),
-        ).collect()[0]
-        times.append(time.time() - t0)
+    times = []
+    for _ in range(TRIALS):  # the sandbox has heavy CPU-steal variance
+        sink_root = tempfile.mkdtemp(prefix="bench_sink_")
+        try:
+            t0 = time.time()
+            summary = run(spark, images, spec.tile_size,
+                          os.path.join(sink_root, "tiles"),
+                          shade_partitions=spec.n_tiles_x * spec.n_tiles_y)
+            times.append(time.time() - t0)
+        finally:
+            shutil.rmtree(sink_root, ignore_errors=True)
     # MEDIAN headline (a typical window, not the luckiest draw); the
     # best trial stays in the artifact as supplementary evidence
     elapsed = statistics.median(times)
-    mpx = agg["total_px"] / 1e6
-    out = {
+    mpx = summary["total_px"] / 1e6
+    return {
         "sec": round(elapsed, 3),
         "sec_best": round(min(times), 3),
-        "n_trials": trials,
-        "tiles": int(agg["tiles"]),
+        "n_trials": TRIALS,
+        "tiles": summary["tiles"],
         "megapixels": round(mpx, 2),
-        "shaded_px": int(agg["shaded_px"]),
+        "shaded_px": summary["shaded_px"],
         "mpx_per_sec": round(mpx / elapsed, 2),
     }
-    return out
 
 
 def run_streaming_hillshade_bench(spark) -> float:
     """Time the streaming hillshade twin (state-store halo exchange) on
     the sf0.01 world, micro-batched ~4 ways via maxFilesPerTrigger, so
-    state-store overhead is a measured number next to the batch path
-    (VERDICT r3 item 8).  availableNow drains the whole table; result
-    cardinality is asserted so a silent early stop can't pass.
+    state-store overhead is a measured number next to the batch path.
+    availableNow drains the whole table; result cardinality is asserted
+    so a silent early stop can't pass.
 
     State partitions are sized to the key cardinality (40 destination
-    tiles -> 8 partitions), not the session's 64 shuffle partitions:
-    the stateful operator pays a per-partition state-store commit
-    (delta file + fsync) EVERY micro-batch, and `tools/stream_profile.py`
-    measured that cost at 13-17.5 s/batch summed across 64 mostly-empty
-    state partitions vs ~0.3 s at 8 (VERDICT r4 item 3).  A production
-    deployment sizes this once at stream creation (the count is frozen
-    into the checkpoint) to O(active keys / cores), exactly as here."""
+    tiles -> 8 partitions), not the session's shuffle partitions: the
+    stateful operator pays a per-partition state-store commit (delta
+    file + fsync) EVERY micro-batch, measured at 13-17.5 s/batch summed
+    across 64 mostly-empty state partitions vs ~0.3 s at 8.  A
+    production deployment sizes this once at stream creation (the count
+    is frozen into the checkpoint) to O(active keys / cores), exactly as
+    here."""
     import glob
-    import shutil
-    import tempfile
 
-    from demeton_spark import codec, streaming
+    from demeton_spark import streaming
 
     spec = WORLD_BY_SF[0.01]
     images_path = ensure_synth_table(spark, spec, 0.01)
@@ -330,10 +227,7 @@ def run_streaming_hillshade_bench(spark) -> float:
             spark, images_path, max_files_per_trigger=per_trigger
         )
         out = streaming.run_to_memory(
-            streaming.streaming_hillshade(
-                stream_in, spec.tile_size, bounds,
-                png_level=codec.RGBA_PNG_LEVEL_FAST,
-            ),
+            streaming.streaming_hillshade(stream_in, spec.tile_size, bounds),
             "bench_stream_shaded",
             ckpt,
         )
@@ -350,261 +244,56 @@ def run_streaming_hillshade_bench(spark) -> float:
         shutil.rmtree(ckpt, ignore_errors=True)
 
 
-def _stage_totals(spark) -> dict:
-    """Aggregate executor metrics over every completed stage (REST API).
-    Callers snapshot before/after the timed work and report the DELTA so
-    setup stages (synth-table generation, warmup trials) do not bias the
-    attribution (ADVICE r2)."""
-    import json as _json
-    import urllib.request
+def bench_once(cpus: int, sf_dir: str, sf: float) -> tuple[dict, dict]:
+    """One session: the hillshade trials, the streaming leg, then every
+    headline query (median of ``TRIALS``).  Returns (hillshade, sec by
+    name)."""
+    import gc
 
-    ui = spark.sparkContext.uiWebUrl
-    if not ui:
-        return {}
-    app = spark.sparkContext.applicationId
-    try:
-        stages = _json.load(
-            urllib.request.urlopen(
-                f"{ui}/api/v1/applications/{app}/stages?status=complete"
-            )
-        )
-    except Exception:
-        return {}
-    return {
-        "task_time_s": round(
-            sum(st.get("executorRunTime", 0) for st in stages) / 1e3, 1
-        ),
-        "cpu_time_s": round(
-            sum(st.get("executorCpuTime", 0) for st in stages) / 1e9, 1
-        ),
-        "shuffle_read_mb": round(
-            sum(st.get("shuffleReadBytes", 0) for st in stages) / 1e6, 1
-        ),
-        "shuffle_write_mb": round(
-            sum(st.get("shuffleWriteBytes", 0) for st in stages) / 1e6, 1
-        ),
-    }
-
-
-def _peak_executor_memory(spark) -> dict:
-    """Peak executor memory from the UI REST API (local mode: the one
-    driver-executor JVM + its Python workers)."""
-    import json as _json
-    import urllib.request
-
-    ui = spark.sparkContext.uiWebUrl
-    if not ui:
-        return {}
-    app = spark.sparkContext.applicationId
-    try:
-        execs = _json.load(
-            urllib.request.urlopen(
-                f"{ui}/api/v1/applications/{app}/executors"
-            )
-        )
-    except Exception:
-        return {}
-    peak: dict[str, int] = {}
-    for e in execs:
-        for k, v in (e.get("peakMemoryMetrics") or {}).items():
-            peak[k] = max(peak.get(k, 0), int(v))
-    out = {}
-    if "JVMHeapMemory" in peak:
-        out["peak_jvm_heap_mb"] = round(peak["JVMHeapMemory"] / 1e6, 1)
-    python_rss = peak.get("ProcessTreePythonRSSMemory", 0)
-    if python_rss:
-        out["peak_python_rss_mb"] = round(python_rss / 1e6, 1)
-    return out
-
-
-def bench_once(cpus: int, sf_dir: str, sf: float, include_queries: bool = True,
-               trials: int = 3, warmup: int = 0, stage_metrics: bool = False):
+    from demeton_spark.queries import QUERIES
     from demeton_spark.session import build_session
+    from jobs.hillshade_job import SESSION_CONF
 
     spec = WORLD_BY_SF.get(sf, WORLD_BY_SF[0.1])
-    extra = {
-        "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEMORY", "48g"),
-        # block-granular rows: bigger Arrow batches amortize overhead
-        "spark.sql.execution.arrow.maxRecordsPerBatch": "512",
-    }
-    if stage_metrics:
-        extra["spark.ui.enabled"] = "true"
-        # surfaces Python-worker RSS in peakMemoryMetrics
-        extra["spark.executor.processTreeMetrics.enabled"] = "true"
-    spark = build_session(
-        app_name=f"bench-local{cpus}",
-        master=f"local[{cpus}]",
-        extra_conf=extra,
-    )
+    spark = build_session(app_name=f"bench-local{cpus}",
+                          master=f"local[{cpus}]", extra_conf=SESSION_CONF)
     try:
         images_path = ensure_synth_table(spark, spec, sf)
-        warm_sec = None
-        if warmup:
-            # one SMALL (sf0.01, 40-tile) hillshade warms the session:
-            # ≥cpus concurrent grouped tasks spawn every Python worker
-            # (numpy/pandas import once per worker, reused after) and
-            # JIT-compile the same generated operators, at ~3% of a
-            # full-SF run's cost.  Recorded as warmup_sec, untimed in
-            # the headline — a long cluster job pays this once.
-            wspec = WORLD_BY_SF[0.01]
-            wpath = ensure_synth_table(spark, wspec, 0.01)
-            t0 = time.time()
-            run_hillshade_bench(spark, wspec, wpath, trials=1)
-            warm_sec = round(time.time() - t0, 3)
-        pre = _stage_totals(spark) if stage_metrics else {}
-        hs = run_hillshade_bench(spark, spec, images_path, trials=trials)
-        if warm_sec is not None:
-            hs["warmup_sec"] = warm_sec
-        if stage_metrics:
-            post = _stage_totals(spark)
-            hs = {**hs, **{k: round(post[k] - pre.get(k, 0), 1)
-                           for k in post}, **_peak_executor_memory(spark)}
+        hs = run_hillshade_bench(spark, spec, images_path)
         queries: dict[str, float] = {"hillshade": hs["sec"]}
-        if include_queries:
-            # single run (not median): a state-store-overhead indicator,
-            # at sf0.01 regardless of the bench SF (streaming state is
-            # exercised, not data scale)
-            queries["streaming_hillshade"] = run_streaming_hillshade_bench(
-                spark
-            )
-        if include_queries:
-            from demeton_spark.queries import QUERIES
-
-            for name in HEADLINE_QUERIES:
-                fn = QUERIES[name]
-                trials_q = []
-                for _ in range(3):  # median-of-3: sandbox CPU-steal variance
-                    t0 = time.time()
-                    fn(spark, sf_dir).count()
-                    trials_q.append(time.time() - t0)
-                queries[name] = round(statistics.median(trials_q), 3)
-                # queries materialize intermediates (signature barriers,
-                # localCheckpoints); drop them between queries so 40+
-                # queries x 3 trials don't accumulate block-manager
-                # pressure.  localCheckpoint RDD blocks are only freed
-                # when the Python-side DataFrame is garbage-collected
-                # (ContextCleaner), so collect explicitly — without it
-                # late queries in the sweep run against a full block
-                # manager and slow an order of magnitude.
-                spark.catalog.clearCache()
-                import gc
-
-                gc.collect()
+        # single run (not median): a state-store-overhead indicator, at
+        # sf0.01 regardless of the bench SF (streaming state is
+        # exercised, not data scale)
+        queries["streaming_hillshade"] = run_streaming_hillshade_bench(spark)
+        for name in HEADLINE_QUERIES:
+            fn = QUERIES[name]
+            trials_q = []
+            for _ in range(TRIALS):
+                t0 = time.time()
+                fn(spark, sf_dir).count()
+                trials_q.append(time.time() - t0)
+            queries[name] = round(statistics.median(trials_q), 3)
+            # queries materialize intermediates (signature barriers,
+            # localCheckpoints); drop them between queries so 50+
+            # queries x 3 trials don't accumulate block-manager
+            # pressure.  localCheckpoint RDD blocks are only freed when
+            # the Python-side DataFrame is garbage-collected
+            # (ContextCleaner), so collect explicitly — without it late
+            # queries in the sweep run against a full block manager and
+            # slow an order of magnitude.
+            spark.catalog.clearCache()
+            gc.collect()
         return hs, queries
     finally:
         spark.stop()
 
 
-def main() -> None:
-    parser = argparse.ArgumentParser()
-    parser.add_argument("--scaling", action="store_true",
-                        help="run local[2]/[8]/[32] core-scaling evidence")
-    parser.add_argument("--weak-scaling", action="store_true",
-                        help="run the sf0.1/0.33/1.0 weak-scaling ladder "
-                             "at fixed local[32]")
-    args = parser.parse_args()
-
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    sf = sf_of_dir(sf_dir)
-
-    if args.weak_scaling:
-        run_weak_scaling(cpus)
-        return
-
-    if args.scaling:
-        # Interleaved rounds: the sandbox's hypervisor steal drifts on a
-        # minutes scale, so comparing local[2] runs from one window with
-        # local[8] runs from another biases the ratio either way.  Each
-        # round runs all three parallelism levels back-to-back (one
-        # contention window) and the efficiency is computed per round;
-        # headline = median round, with per-round values disclosed.
-        steal_before = probe_steal()
-        kernel_before = probe_kernel()
-        rounds: list[dict[int, dict]] = []
-        for r in range(3):
-            one = {}
-            for n in (2, 8, 32):
-                # warmup=1: each fresh session first runs one small
-                # untimed sf0.01 hillshade (codegen JIT + N python
-                # workers importing numpy — a one-time cost a long
-                # cluster job amortizes; it lands hardest at width 32
-                # and so biases the ratio).  Its wall is recorded as
-                # warmup_sec in the results.
-                hs, _ = bench_once(n, sf_dir, sf, include_queries=False,
-                                   trials=2, warmup=1, stage_metrics=True)
-                one[n] = hs
-                print(f"round {r} local[{n}]: {hs}", file=sys.stderr)
-            rounds.append(one)
-        steal_after = probe_steal()
-        per_round_2_8 = [r[2]["sec"] / r[8]["sec"] / 4.0 for r in rounds]
-        per_round_8_32 = [r[8]["sec"] / r[32]["sec"] / 4.0 for r in rounds]
-        # headline = MEDIAN per-round efficiency (a typical contention
-        # window, not the most favorable draw); per-round values and
-        # best-of stay in the artifact as supplementary evidence
-        eff_2_8 = statistics.median(per_round_2_8)
-        eff_8_32 = statistics.median(per_round_8_32)
-        results = {
-            n: min((r[n] for r in rounds), key=lambda h: h["sec"])
-            for n in (2, 8, 32)
-        }
-        window = {
-            "label": os.environ.get("DEMETON_SCALING_LABEL",
-                                    "bench.py --scaling window"),
-            "steal_before": steal_before,
-            "steal_after": steal_after,
-            "kernel_probe_before": kernel_before,
-            "kernel_probe_after": probe_kernel(),
-            "eff_2_8": round(eff_2_8, 3),
-            "eff_8_32": round(eff_8_32, 3),
-            "per_round_2_8": [round(e, 3) for e in per_round_2_8],
-            "per_round_8_32": [round(e, 3) for e in per_round_8_32],
-            "results": {str(n): r for n, r in results.items()},
-            "attribution_rounds": [
-                {str(n): {k: r[n][k] for k in
-                          ("task_time_s", "cpu_time_s", "shuffle_read_mb",
-                           "shuffle_write_mb") if k in r[n]}
-                 for n in (8, 32)}
-                for r in rounds
-            ],
-            "sf": sf,
-        }
-        append_scaling_window(window)
-        write_baseline_md(sf)
-        print(json.dumps({
-            "metric": "hillshade scaling efficiency (N→4N cores)",
-            "value": round(eff_2_8, 3),
-            "unit": "ratio",
-            "sf": sf,
-            "efficiency_2_to_8": round(eff_2_8, 3),
-            "efficiency_8_to_32": round(eff_8_32, 3),
-            "per_round_2_to_8": [round(e, 3) for e in per_round_2_8],
-            "steal_probe": {"before": steal_before, "after": steal_after},
-            "runs": {f"local[{n}]": r for n, r in results.items()},
-        }))
-        return
-
-    steal_before = probe_steal()
-    # /proc/stat steal misses this host's dominant contention mode
-    # (co-tenant memory bandwidth, which steals no CPU); the kernel
-    # probe's 8-way leg reads it directly — slowdown ≈ 1.0 means a
-    # genuinely quiet window, ≥1.3 explains a slow-looking headline.
-    kernel_before = probe_kernel()
-    hs, queries = bench_once(cpus, sf_dir, sf, include_queries=True)
-    steal_after = probe_steal()
-    kernel_after = probe_kernel()
-    total = round(sum(queries.values()), 3)
-    weak = _load_weak_scaling_artifact()
-    # COMPACT headline only.  The driver records a 2,000-char TAIL of
-    # stdout: r3 inlined the weak-scaling blob and r4 the 56-entry
-    # per-query dict, both outgrew the window, cut the FRONT of the
-    # JSON off, and parsed as null — two rounds of machine-unreadable
-    # perf records.  Full per-query timings now go to
-    # BENCH/QUERIES_r{N}.json (round inferred from existing
-    # BENCH_r*.json driver artifacts); the headline inlines only the
-    # two pipeline entries plus the 5 slowest queries and is asserted
-    # under 1,500 chars.
-    queries_artifact = _write_queries_artifact(queries, hs, sf, cpus)
+def headline_json(hs: dict, queries: dict, sf: float, cpus: int,
+                  steal: dict, queries_artifact: str) -> str:
+    """The ONE printed line.  The driver records a 2,000-char TAIL of
+    stdout, so the line inlines only the 7 slowest entries and drops to
+    2 when it would pass 1,500 chars; full per-query timings live in
+    ``queries_artifact``."""
     slow = dict(sorted(queries.items(), key=lambda kv: -kv[1])[:7])
     headline = {
         "metric": (
@@ -612,7 +301,7 @@ def main() -> None:
             f"{hs['mpx_per_sec']} Mpx/s) + {len(queries) - 1} headline "
             f"queries, local[{cpus}]"
         ),
-        "value": total,
+        "value": round(sum(queries.values()), 3),
         "unit": "sec",
         "sf": sf,
         "queries": slow,
@@ -621,25 +310,16 @@ def main() -> None:
         "hillshade_mpx_per_sec": hs["mpx_per_sec"],
         "hillshade_sec_best": hs["sec_best"],
         "cpus": cpus,
-        "n": 3,
+        "n": TRIALS,
         "stat": "median",
-        "steal_probe": {"before": steal_before, "after": steal_after},
-        "kernel_probe_slowdown": {
-            "before": [kernel_before.get("slowdown_vs_quiet"),
-                       kernel_before.get("slowdown_vs_quiet_8way")],
-            "after": [kernel_after.get("slowdown_vs_quiet"),
-                      kernel_after.get("slowdown_vs_quiet_8way")],
-        },
-        "artifacts": {
-            "queries": queries_artifact,
-            "weak_scaling": "BENCH/WEAKSCALING.json" if weak else None,
-        },
+        "steal_probe": steal,
+        "artifacts": {"queries": queries_artifact},
     }
     line = json.dumps(headline)
     if len(line) > 1500:  # keep the whole line inside the driver's tail
         headline["queries"] = dict(list(slow.items())[:2])
         line = json.dumps(headline)
-    print(line)
+    return line
 
 
 def _write_queries_artifact(queries: dict, hs: dict, sf: float,
@@ -661,450 +341,21 @@ def _write_queries_artifact(queries: dict, hs: dict, sf: float,
     path = os.path.join(REPO, rel)
     os.makedirs(os.path.dirname(path), exist_ok=True)
     with open(path, "w") as f:
-        json.dump({"sf": sf, "cpus": cpus, "n": 3, "stat": "median",
+        json.dump({"sf": sf, "cpus": cpus, "n": TRIALS, "stat": "median",
                    "hillshade": hs, "queries": queries}, f, indent=1)
     return rel
 
 
-SCALING_WINDOWS_PATH = os.path.join(REPO, "BENCH", "SCALING_WINDOWS.jsonl")
+def main() -> None:
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    sf = sf_of_dir(sf_dir)
 
-
-def append_scaling_window(window: dict) -> None:
-    """Append one --scaling contention window to the disclosure log.
-
-    Every window ever measured stays in the file; BENCH/BASELINE.md is
-    regenerated FROM the full log, so no run can silently discard
-    history (the r4 hand-edit / regenerate clobber cycle)."""
-    os.makedirs(os.path.dirname(SCALING_WINDOWS_PATH), exist_ok=True)
-    with open(SCALING_WINDOWS_PATH, "a") as f:
-        f.write(json.dumps(window) + "\n")
-
-
-def _load_scaling_windows() -> list[dict]:
-    try:
-        with open(SCALING_WINDOWS_PATH) as f:
-            return [json.loads(ln) for ln in f if ln.strip()]
-    except OSError:
-        return []
-
-
-def write_baseline_md(sf: float) -> None:
-    """Regenerate BENCH/BASELINE.md from the full scaling-window log.
-
-    Headline = the lowest-launch-steal window among those measured with
-    the CURRENT methodology (steady-state: session warm-up excluded,
-    detectable by warmup_sec in the results — earlier windows timed the
-    one-time codegen-JIT + 32-worker numpy import inside the wide leg,
-    which is not comparable); if no steady-state window exists yet,
-    fall back to lowest steal across all.  Per-window values are all
-    disclosed in a table, so the headline choice is auditable, not a
-    cherry-pick."""
-    path = os.path.join(REPO, "BENCH", "BASELINE.md")
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    # Wall-sec/Mpx/s cells are only comparable within one scale factor:
-    # keep only windows measured at the requested sf (missing sf =
-    # legacy windows, all measured at 0.1) so a future --scaling run at
-    # another SF cannot pool incomparable values into one table
-    # (ADVICE r4).
-    windows = [w for w in _load_scaling_windows()
-               if (w.get("sf") if w.get("sf") is not None else 0.1) == sf]
-    if not windows:
-        return
-
-    def steal_key(w):
-        s = w.get("steal_before")
-        return 2.0 if s is None else s
-
-    def _steady(w):
-        return any("warmup_sec" in r
-                   for r in (w.get("results") or {}).values())
-
-    pool = [w for w in windows if _steady(w)] or windows
-    head = min(pool, key=steal_key)
-    eff_2_8, eff_8_32 = head["eff_2_8"], head["eff_8_32"]
-    per_round_2_8 = head.get("per_round_2_8") or []
-    per_round_8_32 = head.get("per_round_8_32") or []
-    # throughput cells: best across every window that recorded walls
-    best: dict[int, dict] = {}
-    for w in windows:
-        for n, r in (w.get("results") or {}).items():
-            n = int(n)
-            if n not in best or r["sec"] < best[n]["sec"]:
-                best[n] = r
-    results = best
-    rows = "\n".join(
-        f"| local[{n}] | {r['sec']} | {r['mpx_per_sec']} |"
-        for n, r in sorted(results.items())
-    )
-    per_round_line = (
-        "\n  — per-round: "
-        + " / ".join(f"{e:.3f}" for e in per_round_2_8)
-        + " (every contention window, not a lucky draw)"
-        if per_round_2_8 else ""
-    )
-    per_round_8_32_line = (
-        "\n  — per-round: " + " / ".join(f"{e:.3f}" for e in per_round_8_32)
-        if per_round_8_32 else ""
-    )
-
-    def _fmt_steal(w):
-        s = w.get("steal_before")
-        return "—" if s is None else f"{100 * s:.1f}%"
-
-    def _fmt_rounds(v):
-        return "/".join(f"{e:.3f}" for e in v) if v else "—"
-
-    wrows = "\n".join(
-        f"| {w['label']}{' **(headline)**' if w is head else ''} | "
-        f"{_fmt_steal(w)} | {w['eff_2_8']:.3f} "
-        f"({_fmt_rounds(w.get('per_round_2_8'))}) | "
-        f"{w['eff_8_32']:.3f} ({_fmt_rounds(w.get('per_round_8_32'))}) | "
-        f"{(w.get('results') or {}).get('32', {}).get('mpx_per_sec', '—')} |"
-        for w in windows
-    )
-    # best single contention-round 8→32 across steady-state windows:
-    # each round is (2,8,32) back-to-back inside ONE window, so it is
-    # the cleanest same-weather comparison the sandbox can produce
-    best_round_line = ""
-    steady_rounds = [(e, w) for w in windows if _steady(w)
-                     for e in (w.get("per_round_8_32") or [])]
-    if steady_rounds:
-        be, bw = max(steady_rounds, key=lambda t: t[0])
-        best_round_line = (
-            f"\nBest single same-weather round at 8→32 across "
-            f"steady-state windows: **{be:.3f}** ({bw['label']}) — each "
-            f"round runs (2, 8, 32) back-to-back inside one contention "
-            f"window, so this is the plan's efficiency when the machine "
-            f"cooperates for ~4 minutes.")
-        try:
-            with open(os.path.join(REPO, "BENCH",
-                                   "KERNEL_CONCURRENCY.json")) as f:
-                ceil = json.load(f)["kernel_efficiency_8_to_32"]
-            best_round_line += (
-                f"  {be:.3f} / {ceil} kernel ceiling = {be / ceil:.0%} "
-                f"of the hardware's own 8→32 scaling.\n")
-        except OSError:
-            best_round_line += "\n"
-    window_md = f"""### Every window ever measured (same build lineage — none discarded)
-
-| window | steal at launch | eff 2→8 (per-round) | eff 8→32 (per-round) | local[32] Mpx/s |
-|---|---|---|---|---|
-{wrows}
-
-The spread across windows is the machine, not the plan: shuffle volume
-and task counts are identical in every round; a window's local[2] leg
-can run faster than another's while its wide legs run slower — the
-signature of contention that penalizes width.  Full per-window JSON:
-`BENCH/SCALING_WINDOWS.jsonl` (append-only; `bench.py --scaling` adds
-a window per run).
-{best_round_line}"""
-    attribution = ""
-    att = next((w for w in reversed(windows)
-                if w.get("attribution_rounds")), None)
-    if att:
-        # Per-stage attribution.  task-s = aggregate executorRunTime
-        # (includes the Python/Arrow kernel time the tasks spend);
-        # jvm-cpu-s = executorCpuTime (JVM side only — the pandas-UDF
-        # compute runs in Python workers, outside this counter).  If
-        # the SAME work occupies more task-seconds at 32 threads than
-        # at 8, each task ran slower → hardware contention (memory
-        # bandwidth / hypervisor steal); if task-seconds stayed flat
-        # while wall-clock efficiency dropped, workers sat idle → a
-        # topology/straggler problem.
-        lines = [f"## Per-stage attribution ({att['label']})", "",
-                 "| round | local[8] task-s | local[32] task-s | "
-                 "task-s inflation | local[8] jvm-cpu-s | "
-                 "local[32] jvm-cpu-s | shuffle r/w MB |",
-                 "|---|---|---|---|---|---|---|"]
-        for i, r in enumerate(att["attribution_rounds"]):
-            r8, r32 = r["8"], r["32"]
-            t8, t32 = r8["task_time_s"], r32["task_time_s"]
-            infl = t32 / t8 if t8 else float("nan")
-            lines.append(
-                f"| {i} | {t8} | {t32} | **{infl:.2f}x** | "
-                f"{r8.get('cpu_time_s', 0)} | {r32.get('cpu_time_s', 0)} | "
-                f"{r32.get('shuffle_read_mb', 0)}/"
-                f"{r32.get('shuffle_write_mb', 0)} |")
-        lines += ["",
-            "Task-second inflation ≈ 1/efficiency means the SAME work "
-            "costs more worker-occupied seconds at 32 threads — "
-            "per-task slowdown from memory-bandwidth / hypervisor-steal "
-            "contention, not idle workers: shuffle volume is identical "
-            "at both widths and granularity is 1 tile/task.  Inflation "
-            "well below 1/efficiency would instead indicate "
-            "stragglers/idle workers; that is not what we observe."]
-        attribution = "\n".join(lines)
-    kernel_md = ""
-    try:
-        with open(os.path.join(REPO, "BENCH",
-                               "KERNEL_CONCURRENCY.json")) as f:
-            kc = json.load(f)
-        kernel_md = f"""## Platform ceiling: the same kernel without Spark
-
-`tools/kernel_concurrency.py` runs the EXACT per-tile kernel
-(`engine.shade_padded_block` + PNG encode, same band rows, same 1800²
-tile) across 1/8/32 independent OS processes — no JVM, no shuffle, no
-Arrow.  Interleaved rounds, steal probed
-({kc['steal_probe']['before']:.2%}→{kc['steal_probe']['after']:.2%}):
-
-| processes | agg Mpx/s | per-tile sec |
-|---|---|---|
-| 1 | {kc['levels']['1']['agg_mpx_per_sec']} | {kc['levels']['1']['per_tile_sec']} |
-| 8 | {kc['levels']['8']['agg_mpx_per_sec']} | {kc['levels']['8']['per_tile_sec']} |
-| 32 | {kc['levels']['32']['agg_mpx_per_sec']} | {kc['levels']['32']['per_tile_sec']} |
-
-- kernel-only 8→32 efficiency: **{kc['kernel_efficiency_8_to_32']}** —
-  the hardware's own ceiling for this compute at 32-way (per-tile time
-  inflates {kc['levels']['32']['per_tile_sec'] / kc['levels']['8']['per_tile_sec']:.2f}×
-  with zero framework involved: memory bandwidth, not Spark).
-- The ceiling itself moves with co-tenant weather: an r4 run of the
-  same tool measured 8→32 = 0.691 (level-1 rounds spread 4.7–8.8
-  Mpx/s — a contended window); the r5 clean-window run above reads
-  0.852.  Spark-vs-ceiling comparisons are only valid within matching
-  weather, and in any weather some of the Spark 8→32 gap below the
-  clean ceiling is harness cost (shuffle fetch + Arrow + scheduling),
-  not hardware.
-- Artifact: `BENCH/KERNEL_CONCURRENCY.json`.
-
-Any Spark 8→32 number must be read against this ceiling: the plan's
-efficiency-of-ceiling is (Spark 8→32) / (kernel 8→32).
-
-"""
-    except OSError:
-        pass
-    weak = _load_weak_scaling_artifact()
-    weak_md = ""
-    if weak:
-        wrows = "\n".join(
-            f"| {p['sf']} | {p['megapixels']} | {p['sec']} | "
-            f"{p['sec_per_mpx']} | {p.get('peak_jvm_heap_mb', '—')} / "
-            f"{p.get('peak_python_rss_mb', '—')} |"
-            for p in weak["points"]
-        )
-        flat = weak["flatness_vs_sf0.1"]
-        single = weak.get("single_ladder")
-        single_md = ""
-        headline_flat = flat
-        if single:
-            srows = "\n".join(
-                f"| {p['sf']} | {p['megapixels']} | {p['sec']} | "
-                f"{p['sec_per_mpx']} |"
-                for p in single["points"]
-            )
-            sflat = single["flatness_vs_sf0.1"]
-            headline_flat = sflat
-            single_md = f"""### Headline: one clean single ladder ({single['label']})
-
-All three points from ONE real execution (min total s/Mpx among
-complete ladders in the log) — unlike the composed row below, this
-curve can be reproduced by a single `bench.py --weak-scaling` run:
-
-| sf | Mpx | wall sec | s/Mpx |
-|---|---|---|---|
-{srows}
-
-- s/Mpx relative to sf0.1: {", ".join(f"sf{k} = {v}" for k, v in sflat.items())}
-
-### Supplementary: per-point best across all ladders (composed)
-"""
-        weak_md = f"""## PRIMARY scale evidence: weak scaling (fixed width, input ×10)
-
-Same pipeline, same local[{weak['cpus']}], input grown a full decade
-(sf0.1 → sf1.0 = 1.3 → 12.9 Gpx through the ONE shuffle).  Flat s/Mpx
-means per-unit cost does not grow with input — the property that
-matters at 100 TB.
-
-{single_md}Each cell = the best window for that point across
-every ladder ever run (`BENCH/WEAKSCALING_RUNS.jsonl`, append-only,
-nothing discarded): a ladder takes many minutes and hypervisor steal
-can turn mid-run — one disclosed r4 ladder measured the sf0.33 point
-at 3× the per-Mpx cost of the 10×-larger sf1.0 point of the SAME run,
-which is contention, not scale.  Min-over-runs per point can
-understate the s/Mpx of any single real execution, which is why the
-single-ladder row above is the headline.
-
-| sf | Mpx | wall sec | s/Mpx | peak JVM heap / Python RSS (MB) |
-|---|---|---|---|---|
-{wrows}
-
-- headline s/Mpx relative to sf0.1: {", ".join(f"sf{k} = {v}" for k, v in headline_flat.items())}
-  (1.0 = perfectly flat; measured by `bench.py --weak-scaling`,
-  artifact BENCH/WEAKSCALING.json)
-- Peak memory stays bounded by TILE size, not input size — the
-  working set per task is one 1800² tile regardless of world size.
-
-"""
-    mpx = results.get(32, {}).get("megapixels", 1296.0)
-    tiles = results.get(32, {}).get("tiles", 400)
-    with open(path, "w") as f:
-        f.write("# BENCH/BASELINE — scale evidence\n\n")
-        f.write(weak_md)
-        f.write(f"""## SECONDARY: core scaling (N vs 4N cores)
-
-Same job, same input (deterministic synthetic image table, SF={sf},
-{mpx} Mpx over {tiles} tiles of
-1800²), end-to-end hillshade pipeline (read parquet → caption-parse
-assignment → block-edge strip emission → ONE shuffle keyed by
-destination tile → fused assemble+halo-pad+Horn+elecolor|+igor shade →
-PNG encode → metrics aggregate).  ``local[N]`` is the sandbox
-proxy for an N-executor cluster (BASELINE.json north_rule).  The
-sandbox shows 2-3× hypervisor-steal drift on a minutes scale, so the
-measurement runs 3 interleaved rounds of (2, 8, 32) back-to-back; the
-efficiency is computed within each round's contention window (the
-MEDIAN round is the headline; per-round values below).  HEADLINE =
-the lowest-launch-steal window among current-methodology (steady-state,
-warm-up-excluded) rows of the table of every window ever measured
-(below); each throughput cell is the best across windows.
-
-| parallelism | wall sec | Mpx/s |
-|---|---|---|
-{rows}
-
-- scaling efficiency N→4N at N=2 (local[2]→local[8]): **{eff_2_8:.3f}**
-  (target ≥ 0.8){per_round_line}
-- scaling efficiency N→4N at N=8 (local[8]→local[32]): {eff_8_32:.3f}{per_round_8_32_line}
-
-{window_md}
-{kernel_md}{attribution}
-
-The machine advertises 32 vCPUs but shows 0-25% hypervisor steal and
-~16 effective memory-bandwidth-bound cores, so the 8→32 pair
-under-reports scalability of the plan itself (the best low-steal
-window observed for the same build: local[32] = 11.1 s, 116.8 Mpx/s).
-The 2→8 pair is the meaningful proxy for the N→4N rule.  Per-task
-memory locality (row-band kernels) plus 1-tile-per-task shuffle
-granularity is what keeps 32-way throughput climbing at all — see
-engine.SHADE_BAND_ROWS and run_hillshade(shade_partitions=…).
-
-Reference single-node baseline (BASELINE.md): the original tool shades
-~0.3 Mpx/s single-threaded (650×488 px ≈ 1 s, docs/Tutorial.md:43-47).
-""")
-
-
-WEAK_SCALING_PATH = os.path.join(REPO, "BENCH", "WEAKSCALING.json")
-WEAK_RUNS_PATH = os.path.join(REPO, "BENCH", "WEAKSCALING_RUNS.jsonl")
-
-#: weak-scaling ladder: fixed parallelism, input grows 10x — the flat
-#: s/Mpx curve is the primary 100-TB scale evidence (one shuffle, 1
-#: tile/task, memory bounded by tile size not input size)
-WEAK_SFS = (0.1, 0.33, 1.0)
-
-
-def _load_weak_scaling_artifact():
-    try:
-        with open(WEAK_SCALING_PATH) as f:
-            return json.load(f)
-    except Exception:
-        return None
-
-
-def run_weak_scaling(cpus: int) -> None:
-    kernel_before = probe_kernel()
-    points = []
-    for sf in WEAK_SFS:
-        # one JVM per point: peak-memory readings do not bleed across
-        # sizes.  warmup=1 (same steady-state methodology as --scaling:
-        # the untimed sf0.01 warm-up pays the one-time codegen-JIT +
-        # per-worker numpy import, which otherwise lands INSIDE the
-        # small points' timed trials and tilts the curve toward
-        # "improves with scale" for the wrong reason).
-        trials = 1 if sf >= 1.0 else 2
-        hs, _ = bench_once(cpus, f"sf{sf}", sf, include_queries=False,
-                           trials=trials, warmup=1, stage_metrics=True)
-        pt = {"sf": sf, **hs,
-              "sec_per_mpx": round(hs["sec"] / hs["megapixels"], 5)}
-        points.append(pt)
-        print(f"weak sf={sf}: {pt}", file=sys.stderr)
-    run = {
-        "label": os.environ.get("DEMETON_WEAK_LABEL",
-                                "bench.py --weak-scaling run"),
-        "cpus": cpus,
-        "kernel_probe_before": kernel_before,
-        "kernel_probe_after": probe_kernel(),
-        "points": points,
-        "sec_per_mpx": {str(p["sf"]): p["sec_per_mpx"] for p in points},
-    }
-    os.makedirs(os.path.dirname(WEAK_RUNS_PATH), exist_ok=True)
-    with open(WEAK_RUNS_PATH, "a") as f:
-        f.write(json.dumps(run) + "\n")
-    result = compose_weak_scaling_artifact()
-    print(json.dumps({
-        "metric": "hillshade weak scaling s/Mpx at fixed local[%d]" % cpus,
-        "value": result["flatness_vs_sf0.1"][str(WEAK_SFS[-1])],
-        "unit": "ratio (1.0 = flat)",
-        **result,
-    }))
-
-
-def compose_weak_scaling_artifact() -> dict:
-    """Rebuild BENCH/WEAKSCALING.json from the append-only run log.
-
-    Each ladder run is one contention window per POINT (a point takes
-    minutes, weather turns mid-ladder: one r4 run measured sf0.33 at
-    3× the per-Mpx cost of the 10×-larger sf1.0 point in the same
-    ladder — physically impossible except as contention).  Headline =
-    per-point BEST s/Mpx across all runs (same treatment as the
-    core-scaling throughput cells), all runs disclosed in the log so
-    nothing is discarded."""
-    runs = []
-    try:
-        with open(WEAK_RUNS_PATH) as f:
-            runs = [json.loads(ln) for ln in f if ln.strip()]
-    except OSError:
-        pass
-    if not runs:
-        return {}
-    best: dict[str, dict] = {}
-    for run in runs:
-        for p in run["points"]:
-            key = str(p["sf"])
-            if key not in best or p["sec_per_mpx"] < best[key]["sec_per_mpx"]:
-                best[key] = {**p, "from_run": run["label"]}
-    points = [best[str(sf)] for sf in WEAK_SFS if str(sf) in best]
-    base = points[0]["sec_per_mpx"]
-    # beside the per-point-best composition, publish ONE clean complete
-    # ladder (min total s/Mpx among runs covering every point): the
-    # composed curve can understate any single real execution (VERDICT
-    # r4 #4), so a reader needs a row that IS a single real execution
-    complete = [r for r in runs
-                if {str(p["sf"]) for p in r["points"]}
-                >= {str(s) for s in WEAK_SFS}]
-    single = None
-    if complete:
-        ladder = min(
-            complete,
-            key=lambda r: sum(p["sec_per_mpx"] for p in r["points"]))
-        spts = {str(p["sf"]): p for p in ladder["points"]}
-        sbase = spts[str(WEAK_SFS[0])]["sec_per_mpx"]
-        single = {
-            "label": ladder["label"],
-            "kernel_probe_before": ladder.get("kernel_probe_before"),
-            "kernel_probe_after": ladder.get("kernel_probe_after"),
-            "points": [spts[str(s)] for s in WEAK_SFS],
-            "sec_per_mpx": {k: p["sec_per_mpx"] for k, p in spts.items()},
-            "flatness_vs_sf0.1": {
-                str(s): round(spts[str(s)]["sec_per_mpx"] / sbase, 3)
-                for s in WEAK_SFS
-            },
-        }
-    result = {
-        "cpus": runs[-1]["cpus"],
-        "stat": "per-point best s/Mpx across all runs in "
-                "BENCH/WEAKSCALING_RUNS.jsonl (append-only; every "
-                "ladder ever run is disclosed there)",
-        "points": points,
-        "sec_per_mpx": {str(p["sf"]): p["sec_per_mpx"] for p in points},
-        # s/Mpx at each size relative to the smallest: 1.0 = perfectly
-        # flat; < 1.0 = the pipeline got MORE efficient as input grew
-        "flatness_vs_sf0.1": {
-            str(p["sf"]): round(p["sec_per_mpx"] / base, 3) for p in points
-        },
-        "single_ladder": single,
-    }
-    with open(WEAK_SCALING_PATH, "w") as f:
-        json.dump(result, f, indent=1)
-    return result
-
+    steal_before = probe_steal()
+    hs, queries = bench_once(cpus, sf_dir, sf)
+    steal = {"before": steal_before, "after": probe_steal()}
+    artifact = _write_queries_artifact(queries, hs, sf, cpus)
+    print(headline_json(hs, queries, sf, cpus, steal, artifact))
 
 if __name__ == "__main__":
     main()

@@ -213,14 +213,12 @@ def decode_heights_png(data: bytes) -> np.ndarray:
     return uint16_to_heights(arr)
 
 
-#: default deflate level for rendered output tiles: 6, matching the
+#: deflate level of every rendered output tile: 6, matching the
 #: reference's zlib DEFAULT_COMPRESSION (Png/Chunks.fs:106) so persisted
-#: artifacts have the reference's storage characteristics.  The pipeline
-#: is encode-bound at level 6 (~1.7s/tile vs ~0.3s shading at 1800²);
-#: throughput-bound paths (bench.py) pass png_level=1 explicitly
-#: (7.8x faster encode, ~12% larger tiles).
+#: artifacts have the reference's storage characteristics.  Level 6
+#: costs about 3.2x the encode time of level 1 for ~12% smaller tiles
+#: (396 vs 122 ms on one 1800² elecolor|+igor tile).
 RGBA_PNG_LEVEL = 6
-RGBA_PNG_LEVEL_FAST = 1
 
 
 def encode_rgba_png(image: np.ndarray, level: int = RGBA_PNG_LEVEL) -> bytes:

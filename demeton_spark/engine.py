@@ -312,8 +312,7 @@ def apply_prefilters(padded: np.ndarray, steps) -> np.ndarray:
 
 def _shade_tile_parts(
     parts: pd.DataFrame, tile_x: int, tile_y: int, tile_size: int,
-    steps, pre_steps, clip_poly: np.ndarray | None,
-    registry: dict, png_level: int,
+    steps, pre_steps, clip_poly: np.ndarray | None, registry: dict,
 ) -> tuple[bytes, int, int] | None:
     """One destination tile's parts (the non-key columns of
     :data:`UNIFIED_PART_SCHEMA`) → ``(png, shaded_px, n_blocks)``: stitch
@@ -366,39 +365,31 @@ def _shade_tile_parts(
         padded, tile_x, tile_y, ts, steps, clip_poly=clip_poly,
         registry=registry,
     )
-    return codec.encode_rgba_png(rgba, png_level), shaded, n_blocks
+    return codec.encode_rgba_png(rgba), shaded, n_blocks
 
 
 def shade_unified(
     parts: DataFrame, tile_size: int, script: str,
     clip_poly: np.ndarray | None = None,
-    halo: int = 1,
     prefilter: str | None = None,
-    png_level: int | None = None,
 ) -> DataFrame:
     """One grouped task per tile running :func:`_shade_tile_parts`.
-    ``parts`` comes from :func:`hillshade_parts` (same halo); groups
-    with no center blocks (strips sent past the world edge) produce
-    nothing.  ``prefilter`` is a step script over kernels.PREFILTERS
-    (e.g. ``"blur"`` or ``"sharpen(amount=1.5)"``); each step consumes
-    one halo ring, so halo must be 1 + n_steps."""
+    ``parts`` comes from :func:`hillshade_parts` with halo 1 + the
+    number of ``prefilter`` steps; groups with no center blocks (strips
+    sent past the world edge) produce nothing.  ``prefilter`` is a step
+    script over kernels.PREFILTERS (e.g. ``"blur"`` or
+    ``"sharpen(amount=1.5)"``); each step consumes one halo ring."""
     steps = pipeline.parse_script(script)
     registry = dict(pipeline.SHADER_REGISTRY)  # snapshot: custom shaders
     # registered on the driver ride the closure to executor processes
-    lvl = codec.RGBA_PNG_LEVEL if png_level is None else png_level
     pre_steps = pipeline.parse_script(prefilter) if prefilter else []
-    if halo != 1 + len(pre_steps):
-        raise ValueError(
-            f"halo {halo} must be 1 + number of prefilter steps "
-            f"({len(pre_steps)})"
-        )
 
     def assemble_pad_shade(pdf: pd.DataFrame) -> pd.DataFrame:
         tile_x = int(pdf["tile_x"].iloc[0])
         tile_y = int(pdf["tile_y"].iloc[0])
         out = _shade_tile_parts(
             pdf, tile_x, tile_y, tile_size, steps, pre_steps, clip_poly,
-            registry, lvl,
+            registry,
         )
         if out is None:
             return pd.DataFrame(columns=_SHADED_COLUMNS)
@@ -537,7 +528,6 @@ def run_tile_shade(
     xth_tiles: DataFrame,
     tile_size: int,
     script: str = TILE_SHADE_SCRIPT,
-    png_level: int | None = None,
 ) -> DataFrame:
     """XTH-packed tiles (heights + water bit) → shaded PNG tiles.
 
@@ -551,7 +541,6 @@ def run_tile_shade(
     steps = pipeline.parse_script(script)
     registry = dict(pipeline.SHADER_REGISTRY)  # snapshot: custom shaders
     # registered on the driver ride the closure to executor processes
-    lvl = codec.RGBA_PNG_LEVEL if png_level is None else png_level
 
     def emit(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         # one traversal emits each tile's center AND its 8 one-px strips
@@ -602,7 +591,7 @@ def run_tile_shade(
             registry=registry,
         )
         return _shaded_row(tile_x, tile_y, ts,
-                           codec.encode_rgba_png(rgba, lvl), shaded, 1)
+                           codec.encode_rgba_png(rgba), shaded, 1)
 
     return parts.groupBy("tile_x", "tile_y").applyInPandas(
         pad_and_shade, schema=SHADED_SCHEMA
@@ -644,7 +633,6 @@ def run_hillshade(
     clip_polygon=None,
     shade_partitions: int | None = None,
     prefilter: str | None = None,
-    png_level: int | None = None,
 ) -> DataFrame:
     """images table → shaded PNG tiles.
 
@@ -696,8 +684,7 @@ def run_hillshade(
     n_parts = shade_partitions or spark.sparkContext.defaultParallelism * 4
     parts = parts.repartition(n_parts, "tile_x", "tile_y")
     shaded = shade_unified(
-        parts, tile_size, script, clip_poly=clip_poly,
-        halo=halo, prefilter=prefilter, png_level=png_level,
+        parts, tile_size, script, clip_poly=clip_poly, prefilter=prefilter,
     )
     if output_dir is not None:
         shaded.write.mode("append").parquet(output_dir)

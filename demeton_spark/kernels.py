@@ -132,17 +132,19 @@ def slope_and_aspect(p: np.ndarray, q: np.ndarray) -> tuple[np.ndarray, np.ndarr
 # pixel shaders: (height, slope, aspect) arrays → RGBA (H, W, 4) uint8
 # ---------------------------------------------------------------------------
 
-def shade_igor(
+def igor_alpha(
     slope: np.ndarray,
     aspect: np.ndarray,
     sun_azimuth_rad: float = math.radians(DEFAULT_SUN_AZIMUTH_DEG),
-    shading_color: tuple[int, int, int, int] = (0, 0, 0, 0),
     intensity: float = 1.0,
 ) -> np.ndarray:
-    """Igor hillshading (IgorHillshader.fs:28-46). NaN aspect → transparent.
+    """Igor darkness as a bare uint8 alpha plane (IgorHillshader.fs:28-46;
+    NaN aspect → 0).
 
     ``aspect`` is expected already normalized to [0, 2π) (the
-    slope_and_aspect contract), so the circular difference needs no fmod.
+    slope_and_aspect contract), so the circular difference needs no
+    fmod.  The fused igor-over-opaque path uses the plane directly to
+    skip materializing the RGBA layer (the RGB is constant black there).
     """
     valid = ~np.isnan(aspect)
     two_pi = math.pi * 2.0
@@ -154,36 +156,26 @@ def shade_igor(
     aspect_diff = np.where(diff > math.pi, two_pi - diff, diff)
     # keep the reference's exact operation order for bit parity
     darkness = (slope / (math.pi / 2.0)) * (aspect_diff / math.pi) * intensity
-    alpha = ratio_to_byte(np.where(valid, darkness, 0.0))
-    out = np.zeros(slope.shape + (4,), dtype=np.uint8)
-    if any(shading_color[:3]):
-        out[..., 0] = np.where(valid, shading_color[0], 0)
-        out[..., 1] = np.where(valid, shading_color[1], 0)
-        out[..., 2] = np.where(valid, shading_color[2], 0)
-    out[..., 3] = np.where(valid, alpha, 0)
-    return out
+    return ratio_to_byte(np.where(valid, darkness, 0.0))
 
 
-def igor_alpha(
+def shade_igor(
     slope: np.ndarray,
     aspect: np.ndarray,
     sun_azimuth_rad: float = math.radians(DEFAULT_SUN_AZIMUTH_DEG),
+    shading_color: tuple[int, int, int, int] = (0, 0, 0, 0),
     intensity: float = 1.0,
 ) -> np.ndarray:
-    """Igor darkness as a bare uint8 alpha plane (NaN aspect → 0).
-
-    Exactly the alpha channel :func:`shade_igor` would produce — the
-    fused igor-over-opaque path uses it to skip materializing the RGBA
-    layer (the RGB is constant black there).
-    """
-    valid = ~np.isnan(aspect)
-    two_pi = math.pi * 2.0
-    saz = float(normalize_angle(sun_azimuth_rad, two_pi))
-    aspect_n = aspect - two_pi * np.floor(aspect / two_pi)
-    diff = np.abs(aspect_n - saz)
-    aspect_diff = np.where(diff > math.pi, two_pi - diff, diff)
-    darkness = (slope / (math.pi / 2.0)) * (aspect_diff / math.pi) * intensity
-    return ratio_to_byte(np.where(valid, darkness, 0.0))
+    """Igor hillshading as an RGBA layer: :func:`igor_alpha` for alpha,
+    ``shading_color``'s RGB where the aspect is defined."""
+    out = np.zeros(slope.shape + (4,), dtype=np.uint8)
+    if any(shading_color[:3]):
+        valid = ~np.isnan(aspect)
+        out[..., 0] = np.where(valid, shading_color[0], 0)
+        out[..., 1] = np.where(valid, shading_color[1], 0)
+        out[..., 2] = np.where(valid, shading_color[2], 0)
+    out[..., 3] = igor_alpha(slope, aspect, sun_azimuth_rad, intensity)
+    return out
 
 
 def _rdiv255(x: np.ndarray) -> np.ndarray:

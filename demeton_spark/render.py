@@ -128,7 +128,6 @@ def render_shaded_raster(
     tile_size: int = 3600,
     raster_tile_px: int = 1000,
     projection=None,
-    png_level: int | None = None,
 ) -> DataFrame:
     """The ``shade`` command: DEM tile table + bbox + scale → projected
     shaded raster tiles.
@@ -139,7 +138,6 @@ def render_shaded_raster(
     proj = projection or Mercator(map_scale)
     steps = pipeline.parse_script(script)
     registry = dict(pipeline.SHADER_REGISTRY)  # driver snapshot for executors
-    lvl = codec.RGBA_PNG_LEVEL if png_level is None else png_level
     mbr = raster_mbr(proj, coverage_points_deg)
     raster_tiles = split_into_tiles(mbr, raster_tile_px)
 
@@ -241,7 +239,7 @@ def render_shaded_raster(
                 "min_y": [min_y],
                 "width": [w],
                 "height": [h],
-                "png": [codec.encode_rgba_png(out[::-1, :, :], lvl)],
+                "png": [codec.encode_rgba_png(out[::-1, :, :])],
                 "shaded_px": [shaded],
                 "total_px": [w * h],
                 "n_dem_tiles": [len(pdf)],

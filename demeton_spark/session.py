@@ -25,6 +25,19 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """Half the host's physical RAM in whole GB, between 1g and 24g.
+
+    In local mode the driver JVM is also the only executor, and its
+    Python workers live outside the heap, so half the RAM leaves them
+    room; a fixed 24g would let the heap outgrow a 15 GB host."""
+    try:
+        ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, ValueError, OSError):  # no sysconf here
+        return "24g"
+    return f"{max(1, min(24, ram // 2 ** 31))}g"
+
+
 def build_session(
     app_name: str = "demeton-spark",
     master: str | None = None,
@@ -72,12 +85,13 @@ def build_session(
         # ~26 MB; 64 rows ≈ 1.7 GB ceiling per Arrow batch).  Jobs whose
         # UDF inputs are BLOCK-granular (the fused hillshade path: ~KB
         # rows) should raise this to 512 in extra_conf — measured ~15%
-        # end-to-end (batch overhead amortizes; bench.py and
-        # jobs/hillshade_job.py do).
+        # end-to-end (batch overhead amortizes; jobs/hillshade_job.py's
+        # SESSION_CONF does, and bench.py builds its session from it).
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "64")
         .config("spark.sql.files.maxPartitionBytes", "128m")
         .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEMORY", _default_driver_memory()))
         .config("spark.driver.maxResultSize", "4g")
         .config("spark.ui.enabled", "false")
     )

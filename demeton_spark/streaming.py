@@ -374,7 +374,6 @@ def streaming_hillshade(
     script: str = "elecolor|+igor",
     clip_polygon=None,
     prefilter: str | None = None,
-    png_level: int | None = None,
 ) -> DataFrame:
     """Streaming twin of the fused batch topology: incremental
     hillshade with cross-batch halo exchange, one stateful operator.
@@ -400,7 +399,6 @@ def streaming_hillshade(
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    from . import codec
     from .engine import (
         _BLOCK_STRIP_SPEC,
         _shade_tile_parts,
@@ -413,7 +411,6 @@ def streaming_hillshade(
 
     steps = parse_script(script)
     registry = dict(SHADER_REGISTRY)  # driver snapshot for executors
-    lvl = codec.RGBA_PNG_LEVEL if png_level is None else png_level
     pre_steps = parse_script(prefilter) if prefilter else []
     halo = 1 + len(pre_steps)
     wx0, wy0, wx1, wy1 = world_bounds  # sender existence universe
@@ -492,7 +489,6 @@ def streaming_hillshade(
         })
         png, shaded, n_blocks = _shade_tile_parts(
             tile_parts, tx, ty, ts, steps, pre_steps, clip_poly, registry,
-            lvl,
         )
         state.update((True, [], [], [], [], [], [], [], []))
         yield pd.DataFrame(

@@ -32,6 +32,36 @@ import time
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
 
 
+#: session settings the job runs under (bench.py builds its session from
+#: them too): the hillshade pipeline's UDF inputs are block-granular
+#: (~KB rows), so larger Arrow batches amortize per-batch overhead
+SESSION_CONF = {"spark.sql.execution.arrow.maxRecordsPerBatch": "512"}
+
+
+def run(spark, images, tile_size: int, output: str, **opts) -> dict:
+    """Shade ``images`` into the parquet sink at ``output`` and return the
+    run summary over the whole sink.  ``opts`` go to ``run_hillshade``
+    (script, resume, clip_polygon, prefilter, shade_partitions)."""
+    from pyspark.sql import functions as F
+
+    from demeton_spark.engine import run_hillshade
+
+    shaded = run_hillshade(spark, images, tile_size, output_dir=output, **opts)
+    summary = shaded.agg(
+        F.count("*").alias("tiles"),
+        F.sum("n_blocks").alias("blocks_consumed"),
+        F.sum("shaded_px").alias("shaded_px"),
+        F.sum("total_px").alias("total_px"),
+    ).collect()[0]
+    return {
+        "tiles": summary["tiles"],
+        "blocks_consumed": int(summary["blocks_consumed"] or 0),
+        "shaded_px": int(summary["shaded_px"]),
+        "total_px": int(summary["total_px"]),
+        "megapixels": round(summary["total_px"] / 1e6, 2),
+    }
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--input", help="images parquet path")
@@ -54,17 +84,10 @@ def main() -> None:
     ap.add_argument("--master", default=None)
     args = ap.parse_args()
 
-    from pyspark.sql import functions as F
-
-    from demeton_spark.engine import run_hillshade
     from demeton_spark.session import build_session
 
-    spark = build_session(
-        app_name="hillshade-job", master=args.master,
-        # the hillshade pipeline's UDF inputs are block-granular (~KB
-        # rows): larger Arrow batches amortize per-batch overhead
-        extra_conf={"spark.sql.execution.arrow.maxRecordsPerBatch": "512"},
-    )
+    spark = build_session(app_name="hillshade-job", master=args.master,
+                          extra_conf=SESSION_CONF)
     t0 = time.time()
     if args.synthetic:
         from demeton_spark.synth import WorldSpec, images_df
@@ -86,34 +109,23 @@ def main() -> None:
             tuple(float(c) for c in pt.split(","))
             for pt in args.clip_polygon.split(";") if pt
         ]
-    shaded = run_hillshade(
+    summary = run(
         spark,
         images,
         tile_size,
+        args.output,
         script=args.script,
-        output_dir=args.output,
         resume=not args.no_resume,
         clip_polygon=clip,
         prefilter=args.prefilter,
         shade_partitions=args.shade_partitions or None,
     )
-    summary = shaded.agg(
-        F.count("*").alias("tiles"),
-        F.sum("n_blocks").alias("blocks_consumed"),
-        F.sum("shaded_px").alias("shaded_px"),
-        F.sum("total_px").alias("total_px"),
-    ).collect()[0]
     print(json.dumps({
-        "tiles": summary["tiles"],
-        "blocks_consumed": int(summary["blocks_consumed"] or 0),
-        "shaded_px": int(summary["shaded_px"]),
-        "total_px": int(summary["total_px"]),
-        "megapixels": round(summary["total_px"] / 1e6, 2),
+        **summary,
         "wall_sec": round(time.time() - t0, 2),
         "output": args.output,
     }))
     spark.stop()
-
 
 if __name__ == "__main__":
     main()
